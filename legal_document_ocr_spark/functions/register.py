@@ -32,31 +32,14 @@ from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ..kernels import clean_text, extract_fields, extract_page, normalize_match_text
-from ..stages import FIELDS_TYPE, PAGE_RESULT_TYPE
-
-
-@pandas_udf(PAGE_RESULT_TYPE)
-def _extract_page_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    for series in batches:
-        yield pd.DataFrame(
-            [extract_page(raw) for raw in series],
-            columns=list(PAGE_RESULT_TYPE.fieldNames()),
-        )
+from ..kernels import clean_text, extract_page, normalize_match_text
+from ..stages import extract_fields_udf, extract_page_udf
 
 
 @pandas_udf(StringType())
 def _extract_text_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     for series in batches:
         yield pd.Series([extract_page(raw)["extracted_text"] for raw in series])
-
-
-@pandas_udf(FIELDS_TYPE)
-def _extract_fields_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    for series in batches:
-        yield pd.DataFrame(
-            [extract_fields(t) for t in series], columns=list(FIELDS_TYPE.fieldNames())
-        )
 
 
 @pandas_udf(StringType())
@@ -98,9 +81,9 @@ class _ShinglesUDTF:
 
 def register_all(spark: SparkSession) -> None:
     """Register the full SQL function surface on a session (idempotent)."""
-    spark.udf.register("ldos_extract_page", _extract_page_udf)
+    spark.udf.register("ldos_extract_page", extract_page_udf)
     spark.udf.register("ldos_extract_text", _extract_text_udf)
-    spark.udf.register("ldos_extract_fields", _extract_fields_udf)
+    spark.udf.register("ldos_extract_fields", extract_fields_udf)
     spark.udf.register("ldos_clean_text", _clean_text_udf)
     spark.udf.register("ldos_norm_match", _norm_match_udf)
     spark.udf.register("ldos_nfc", _nfc_udf)

@@ -18,7 +18,11 @@ Reference kernel mapping (file:line into /root/reference/):
                           + K5-K7 table detection (table_detector_service.py:15-110):
                           DOM block segmentation with text/link-density features
                           replaces contour detection; <table> cell grid replaces
-                          ruled-line intersection clustering.
+                          ruled-line intersection clustering. The tokenizer
+                          is a single forward pass written here (no stdlib
+                          html.parser): linear in page bytes up to
+                          MAX_HTML_BYTES, with html.parser's token boundaries
+                          (see _BlockCollector).
 - keep_block           <- P3 region filter (region_segmentation_service.py:19-27,
                           config.json:19-21): min-chars + link-density band
                           replaces min-area + aspect-ratio band.
@@ -38,7 +42,7 @@ Reference kernel mapping (file:line into /root/reference/):
 from __future__ import annotations
 
 import re
-from html.parser import HTMLParser
+from html import unescape
 from typing import Any
 
 from .config import (
@@ -98,7 +102,7 @@ def decode_html(raw: bytes | None) -> str:
 
 
 class _Block:
-    __slots__ = ("tag", "parts", "link_chars", "boiler", "index")
+    __slots__ = ("tag", "parts", "link_chars", "boiler", "index", "text")
 
     def __init__(self, tag: str, boiler: bool, index: int) -> None:
         self.tag = tag
@@ -106,16 +110,18 @@ class _Block:
         self.link_chars = 0
         self.boiler = boiler
         self.index = index
+        self.text = ""
 
-    @property
-    def text(self) -> str:
+    def finish(self) -> str:
         # whitespace canonicalization (K1 normalize analogue): collapse runs
         # of markup whitespace to single spaces per line; hard breaks (<br>,
         # <pre> newlines) become \r\n — already in clean_text's normal form,
-        # so clean_text (K8) is idempotent on block output.
+        # so clean_text (K8) is idempotent on block output. Computed once,
+        # when the block closes.
         segments = "".join(self.parts).split(_BR)
         lines = [" ".join(seg.split()) for seg in segments]
-        return "\r\n".join(line for line in lines if line)
+        self.text = "\r\n".join(line for line in lines if line)
+        return self.text
 
     @property
     def link_density(self) -> float:
@@ -123,51 +129,143 @@ class _Block:
         return (self.link_chars / n) if n else 1.0
 
 
-class _BlockCollector(HTMLParser):
-    """Streaming DOM segmenter: linear in input size, no tree materialized.
+# -- tokenizer patterns. Every token boundary below reproduces the HTML5-
+# tolerant rules of CPython's ``html.parser`` (3.11) for a fully fed input,
+# so segmentation is unchanged; only the scan strategy differs.
+_LETTERS = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
+# one token at the cursor: a text run, a common start tag (plain name,
+# space-separated name[=value] attributes with a quoted or unquoted value,
+# optional "/" before ">") or an end tag. Possessive quantifiers keep the
+# match linear; a "<" it does not match takes the general path in ``feed``.
+_TOKEN = re.compile(
+    r"([^<]++)"
+    r"|<([a-zA-Z][-a-zA-Z0-9]*+)"
+    r"(?:[ \t\n\r\f]++[a-zA-Z_:][-a-zA-Z0-9_:.]*+"
+    r"(?:=(?:\"[^\"]*+\"|'[^']*+'|[^\s\"'<>=`]++))?)*+"
+    r"[ \t\n\r\f]*+(/?)>"
+    r"|</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"
+)
+_TAG_NAME_RUN = re.compile(r"[^\t\n\r\f />\x00]*")
+_SPACE_SLASH_RUN = re.compile(r"[\s/]*")
+_SEPARATOR_RUN = re.compile(r"(?:\s|/(?!>))*")
+_SPACE_RUN = re.compile(r"\s*")
+_ATTR_NAME_TAIL = re.compile(r"[^\s/=>]*")
+_EQUALS_RUN = re.compile(r"=+")
+_BARE_VALUE = re.compile(r"[^>\s]*")
+_END_TAG_NAME = re.compile(r"[a-zA-Z][^\t\n\r\f />\x00]*")
+_COMMENT_CLOSE = re.compile(r"--\s*>")
+_DECL_NAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*")
+_MARKED_SECTIONS = frozenset({"temp", "cdata", "ignore", "include", "rcdata"})
+_MS_SECTIONS = frozenset({"if", "else", "endif"})
+_MARKED_CLOSE = re.compile(r"]\s*]\s*>")
+_MS_MARKED_CLOSE = re.compile(r"]\s*>")
+_RAW_TEXT_CLOSE = {
+    t: re.compile(r"</\s*%s\s*>" % t, re.IGNORECASE) for t in ("script", "style")
+}
+_GT = re.compile(">")
+_LT_RUN = re.compile("<+")
+
+
+class _Search:
+    """Leftmost-match search over one page that remembers its last answer.
+
+    A search from ``pos`` that found its first match at ``m`` (or none at
+    all) answers every later query from ``pos' in [pos, m]`` too, so a
+    caller whose query positions only grow scans each byte at most once.
+    """
+
+    __slots__ = ("search", "start", "found")
+
+    def __init__(self, pattern: re.Pattern[str]) -> None:
+        self.search = pattern.search
+        self.start = -1  # no answer yet
+        self.found: re.Match[str] | None = None
+
+    def __call__(self, text: str, pos: int) -> re.Match[str] | None:
+        found = self.found
+        if not (
+            0 <= self.start <= pos and (found is None or pos <= found.start())
+        ):
+            found = self.found = self.search(text, pos)
+            self.start = pos
+        return found
+
+
+class _BlockCollector:
+    """Streaming DOM segmenter: one forward pass, no tree materialized.
 
     Emits text blocks in document order (the reading-order guarantee — the
     analogue of the reference's y-sort at region_segmentation_service.py:30
     and np.lexsort grid ordering at table_detector_service.py:82: DOM order
     IS reading order for HTML).
+
+    ``feed`` is the tokenizer. It cuts the page into text runs (passed
+    through ``html.unescape``), start/end/self-closing tags (lowercased
+    names; attributes are skipped, quoted values may hold ``>``),
+    comments, declarations, processing instructions and raw-text
+    ``script``/``style`` bodies, at the same boundaries and with the same
+    ``handle_data`` chunking as CPython's ``html.parser`` on a fully fed
+    page. One documented difference: an unterminated ``<!--`` ends the
+    page instead of leaking its body as text.
+
+    Time is linear in the page size. A text run or a common tag is one
+    ``_TOKEN`` match; an irregular start tag is located
+    by a left-to-right attribute walk whose every step is memoised by
+    position (``_attr_walk``), and every forward search that can fail
+    (next ``>``, marked-section close) remembers its answer (``_Search``),
+    so no byte is rescanned by later tags — a page of ``"<a" * n`` or of
+    unclosed quotes costs O(n), not the stdlib parser's O(n^2).
     """
 
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
         self.blocks: list[_Block] = []
         self.tables: list[list[list[str]]] = []  # table -> rows -> cell texts
         self._stack: list[str] = []
+        # nearest enclosing BLOCK_TAGS tag per stack level, and open-tag
+        # counts: O(1) answers for _ensure_block and handle_endtag at any depth
+        self._block_stack: list[str] = []
+        self._open: dict[str, int] = {}
         self._drop_depth = 0
         self._boiler_depth = 0
         self._link_depth = 0
         self._cur: _Block | None = None
         self._pre_depth = 0
         self._table_stack: list[dict[str, Any]] = []
+        # tokenizer memos, valid for the one page ``feed`` is given
+        self._walk: dict[int, int] = {}
+        self._last_quote: dict[str, int] = {}
+        self._name_run = (1, 0)  # (from, end) of the last tag-name run
+        self._start_memo = (-1, 0, False)  # (name end, attrs end, "/>" seen)
+        self._next_gt = _Search(_GT)
+        self._marked_close = _Search(_MARKED_CLOSE)
+        self._ms_marked_close = _Search(_MS_MARKED_CLOSE)
 
     # -- block lifecycle --
     def _flush(self) -> None:
-        if self._cur is not None and self._cur.text:
+        if self._cur is not None and self._cur.finish():
             self.blocks.append(self._cur)
         self._cur = None
 
     def _ensure_block(self) -> _Block:
         if self._cur is None:
-            tag = "body"
-            for t in reversed(self._stack):
-                if t in BLOCK_TAGS:
-                    tag = t
-                    break
+            tag = self._block_stack[-1] if self._block_stack else "body"
             self._cur = _Block(tag, self._boiler_depth > 0, len(self.blocks))
         return self._cur
 
-    # -- HTMLParser hooks --
-    def handle_starttag(self, tag: str, attrs: Any) -> None:
-        tag = tag.lower()
+    # -- token handlers (tag names arrive lowercased) --
+    def handle_starttag(self, tag: str) -> None:
         if tag == "br":
             if self._cur is not None:
                 self._cur.parts.append(_BR)
             return
         self._stack.append(tag)
+        self._open[tag] = self._open.get(tag, 0) + 1
+        if tag in BLOCK_TAGS:
+            self._block_stack.append(tag)
+        else:
+            self._block_stack.append(
+                self._block_stack[-1] if self._block_stack else "body"
+            )
         if tag == "pre":
             self._pre_depth += 1
         if tag in DROP_TAGS:
@@ -193,11 +291,12 @@ class _BlockCollector(HTMLParser):
                 t["cur_row"].append(t["cur_cell"])
 
     def handle_endtag(self, tag: str) -> None:
-        tag = tag.lower()
         # pop to matching open tag (lenient on malformed nesting)
-        if tag in self._stack:
+        if self._open.get(tag):
             while self._stack:
                 popped = self._stack.pop()
+                self._block_stack.pop()
+                self._open[popped] -= 1
                 if popped in DROP_TAGS:
                     self._drop_depth = max(0, self._drop_depth - 1)
                 if popped in BOILERPLATE_TAGS:
@@ -235,20 +334,211 @@ class _BlockCollector(HTMLParser):
         if self._table_stack and self._table_stack[-1]["cur_cell"] is not None:
             self._table_stack[-1]["cur_cell"].append(data)
 
-    def close(self) -> None:  # flush trailing text
-        super().close()
+    # -- tokenizer --
+    def feed(self, s: str) -> None:
+        """Tokenize the whole page ``s`` and close the last block."""
+        n = len(s)
+        token = _TOKEN.match
+        data = self.handle_data
+        start_tag = self.handle_starttag
+        end_tag = self.handle_endtag
+        i = 0
+        while i < n:
+            m = token(s, i)
+            if m is None:
+                if s[i + 1 : i + 2] not in _LETTERS:  # "" is not in the set
+                    i = self._markup(s, i)
+                    if i < 0:
+                        break
+                    continue
+                tag, endpos, closed = self._irregular_start(s, i)
+                if endpos < 0:
+                    i = self._as_text(s, i)
+                    continue
+                if tag is None:  # no usable tag end: literal text, raw
+                    data(s[i:endpos])
+                    i = endpos
+                    continue
+            else:
+                kind = m.lastindex
+                if kind == 1:
+                    text = m.group(1)
+                    data(unescape(text) if "&" in text else text)
+                    i = m.end()
+                    continue
+                if kind == 4:
+                    end_tag(m.group(4).lower())
+                    i = m.end()
+                    continue
+                tag = m.group(2).lower()
+                endpos = m.end()
+                closed = bool(m.group(3))
+            start_tag(tag)
+            if closed:
+                end_tag(tag)
+            elif tag in _RAW_TEXT_CLOSE:
+                # raw-text body: inside DROP_TAGS, so its text is dropped
+                m = _RAW_TEXT_CLOSE[tag].search(s, endpos)
+                if m is None:
+                    break  # unterminated: the rest of the page is body
+                end_tag(tag)
+                endpos = m.end()
+            i = endpos
         self._flush()
+
+    def _markup(self, s: str, i: int) -> int:
+        """Consume the ``<`` construct at ``i`` that is not a start tag.
+
+        Returns the position after it, or -1 when it ends the page.
+        """
+        c = s[i + 1 : i + 2]
+        if c == "/":
+            g = self._next_gt(s, i + 1)
+            if g is None:
+                return self._as_text(s, i)
+            # an end tag _TOKEN did not match: "</x y>", "</x<y>", or
+            # "</>" and "</ !x>", which report nothing
+            m = _END_TAG_NAME.match(s, i + 2)
+            if m is not None:
+                self.handle_endtag(m.group().lower())
+            return g.end()
+        if c == "!" or c == "?":
+            if s.startswith("<!--", i):
+                m = _COMMENT_CLOSE.search(s, i + 4)
+                return -1 if m is None else m.end()  # unterminated: swallow
+            if c == "?" or not s.startswith("<![", i):
+                skip = 9 if s[i : i + 9].lower() == "<!doctype" else 2
+                g = self._next_gt(s, i + skip)
+            else:
+                # marked section: <![CDATA[...]]>, <![if ...]>
+                m = _DECL_NAME.match(s, i + 3)
+                if m is None and i + 3 < len(s):
+                    return -1  # malformed declaration ends the page
+                if m is None or m.end() == len(s):
+                    g = None
+                else:
+                    name = m.group().strip().lower()
+                    if name in _MARKED_SECTIONS:
+                        close = self._marked_close
+                    elif name in _MS_SECTIONS:
+                        close = self._ms_marked_close
+                    else:
+                        return -1  # unknown section keyword ends the page
+                    g = close(s, i + 3)
+            return self._as_text(s, i) if g is None else g.end()
+        # "<" that opens nothing is text. In a run of them each one but the
+        # last is followed by "<", so they form one chunk; the last one is
+        # dispatched again unless it ends the page.
+        k = _LT_RUN.match(s, i).end()
+        if k < len(s) and k - i > 1:
+            k -= 1
+        self.handle_data(s[i:k])
+        return k
+
+    def _as_text(self, s: str, i: int) -> int:
+        """An unfinished construct at ``i`` becomes text up to and including
+        the next ``>`` (or up to the next ``<``, or just the ``<``)."""
+        g = self._next_gt(s, i + 1)
+        if g is not None:
+            k = g.end()
+        else:
+            k = s.find("<", i + 1)
+            if k < 0:
+                k = i + 1
+        self.handle_data(unescape(s[i:k]))
+        return k
+
+    def _irregular_start(self, s: str, i: int) -> tuple[str | None, int, bool]:
+        """Locate the end of a start tag the fast pattern did not match.
+
+        Returns ``(tag, endpos, self_closing)``; ``endpos < 0`` means the tag
+        never ends (the caller turns it into text) and ``tag is None`` means
+        it ends without ``>`` and is emitted as literal text. The tag-name
+        run and the attribute walk are memoised, so tags that share them
+        (``<a<a<a...``, ``<a b='>'<a b='>'...``) are scanned once.
+        """
+        lo, e = self._name_run
+        if not lo <= i + 1 <= e:
+            e = _TAG_NAME_RUN.match(s, i + 1).end()
+            self._name_run = (i + 1, e)
+        name_end, j, slash = self._start_memo
+        if name_end != e:
+            p0 = _SPACE_SLASH_RUN.match(s, e).end()
+            slash = _SEPARATOR_RUN.match(s, e).end() < p0  # "/>" after name
+            j = self._attr_walk(s, p0)
+            self._start_memo = (e, j, slash)
+        nxt = s[j : j + 1]
+        if nxt == ">":
+            return s[i + 1 : e].lower(), j + 1, slash
+        if nxt == "/":
+            if s.startswith("/>", j):
+                return s[i + 1 : e].lower(), j + 2, True
+            return None, -1, False
+        if not nxt or nxt in _LETTERS or nxt == "=":
+            return None, -1, False
+        return None, j, False
+
+    def _attr_walk(self, s: str, p: int) -> int:
+        """End of the attribute list that starts at ``p``.
+
+        Each step consumes one attribute — a name, an optional ``=value``
+        (quoted, or bare up to whitespace or ``>``) and separators — until
+        no attribute can start. Every visited step start is memoised with
+        the final end, so a walk that joins an earlier one stops there.
+        """
+        walk = self._walk
+        path = []
+        while True:
+            end = walk.get(p)
+            if end is not None:
+                break
+            c = s[p : p + 1]
+            prev = s[p - 1]
+            if (
+                not c
+                or c.isspace()
+                or c in "/>"
+                or not (prev in "'\"/" or prev.isspace())
+            ):
+                end = p
+                break
+            path.append(p)
+            q = _ATTR_NAME_TAIL.match(s, p + 1).end()
+            p = _SPACE_RUN.match(s, q).end()
+            if s.startswith("=", p):
+                eq = _EQUALS_RUN.match(s, p).end()
+                v = _SPACE_RUN.match(s, eq).end()
+                quote = s[v : v + 1]
+                if quote in ("'", '"'):
+                    last = self._last_quote.get(quote)
+                    if last is None:
+                        last = self._last_quote[quote] = s.rfind(quote)
+                    close = s.find(quote, v + 1) if last > v else -1
+                    if close >= 0:
+                        p = _SPACE_RUN.match(s, close + 1).end()
+                    elif v > eq:
+                        p = v  # empty bare value before the stray quote
+                    elif eq - p >= 2:
+                        # one "=" handed back becomes the start of a bare value
+                        p = _SPACE_RUN.match(
+                            s, _BARE_VALUE.match(s, eq - 1).end()
+                        ).end()
+                    else:
+                        p = q  # no value: the "=" stays unconsumed
+                else:
+                    p = _SPACE_RUN.match(s, _BARE_VALUE.match(s, v).end()).end()
+            else:
+                p = q
+            p = _SEPARATOR_RUN.match(s, p).end()
+        for x in path:
+            walk[x] = end
+        return end
 
 
 def parse_blocks(html: str) -> tuple[list[_Block], list[list[list[str]]]]:
     """Segment an HTML document into reading-ordered text blocks + tables."""
     c = _BlockCollector()
-    try:
-        c.feed(html)
-        c.close()
-    except Exception:
-        # malformed beyond the lenient parser: treat remaining text as one block
-        c._flush()
+    c.feed(html)
     return c.blocks, c.tables
 
 

@@ -5276,10 +5276,11 @@ def unigram_segment(
     alternate segmentations cannot make the output nondeterministic
     because only (v, n_pieces) are emitted.
 
-    Input bounds (hard contract, guarded in the kernel): the dominance
-    argument and the (−v) % 64 recovery require n_pieces <= 63, and
-    n_pieces is bounded by word length, so any word >= 64 chars raises
-    ValueError instead of silently mis-decoding. Separately, the SQL
+    Input bounds (guarded in the kernel): the dominance argument and
+    the (−v) % 64 recovery require n_pieces <= 63, and n_pieces is
+    bounded by word length, so a word of >= 64 chars (a URL, a base64
+    run) is not segmented: it comes out as one piece, n_pieces = 1,
+    flagged by a NULL ``best_micro``, and the query goes on. Separately, the SQL
     oracle unrolls the Viterbi DP to 12 pieces, so words whose best
     segmentation needs > 12 pieces are outside the oracle contract
     (single chars are always in vocab, so that means words > 12 chars
@@ -5309,15 +5310,15 @@ def unigram_segment(
         vs = bvocab.value
         for pdf in batches:
             nps: list[int] = []
-            bests: list[int] = []
+            bests: list[int | None] = []
             for word in pdf["word"]:
                 ln = len(word)
                 if ln >= 64:
-                    raise ValueError(
-                        "unigram_segment: word of length "
-                        f"{ln} >= 64 breaks the mod-64 piece-count "
-                        "packing (n_pieces must stay <= 63)"
-                    )
+                    # outside the mod-64 packing: one piece, flagged by a
+                    # null score (a URL or base64 run, not a word)
+                    nps.append(1)
+                    bests.append(None)
+                    continue
                 best: list[int | None] = [None] * (ln + 1)
                 best[0] = 0
                 for j in range(1, ln + 1):
@@ -5342,7 +5343,7 @@ def unigram_segment(
                     "word": pdf["word"],
                     "n": pdf["n"],
                     "n_pieces": nps,
-                    "best_micro": bests,
+                    "best_micro": pd.array(bests, dtype="Int64"),
                 }
             )
 

@@ -15,8 +15,10 @@ app/services/document_service.py:48-50,79):
   job never yields partial reads (single-writer rename-commit, the same
   atomicity contract an Iceberg snapshot commit gives on a real catalog);
 - the manifest carries per-partition lineage + counters (partition_id, rows,
-  url min/max, bytes) gathered in the same action that writes the data —
-  via ``groupBy(spark_partition_id())`` on the result, not a second scan;
+  url min/max; no byte counts), gathered by a second, column-pruned scan
+  that reads the just-written files back and groups them by the
+  ``partition_id`` column stamped at write time — so the counters describe
+  exactly what was committed;
 - resume = ``pages.join(done_urls, 'url', 'left_anti')`` — only urls never
   committed are recomputed; re-running a finished job is a no-op.
 """

@@ -10,6 +10,7 @@ timestamp semantics match the DuckDB oracle.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -58,10 +59,12 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # managed-table warehouse for bucketed tables (co-located joins);
-        # kept out of the repo tree
+        # kept out of the repo tree, and fresh per session unless set, so a
+        # table location left by a killed earlier run cannot collide
         .config(
             "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/ldos-warehouse"),
+            os.environ.get("SPARK_WAREHOUSE_DIR")
+            or tempfile.mkdtemp(prefix="ldos-warehouse-"),
         )
     )
     return builder.getOrCreate()

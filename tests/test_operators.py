@@ -2914,21 +2914,24 @@ def test_driver_loop_operators_enforce_documented_bounds(spark):
         mmr_select(docs, ["a"], n_candidates=8, k=9)
 
 
-def test_unigram_segment_kernel_rejects_mod64_overflow_words(spark):
+def test_unigram_segment_emits_overlong_word_as_one_flagged_piece(spark):
     """The (−v) % 64 piece-count packing is only invertible while
-    n_pieces <= 63 (bounded by word length); a >= 64-char word must
-    raise inside the kernel rather than silently mis-decode (ADVICE
-    round 4)."""
-    import pytest as _pytest
-
+    n_pieces <= 63 (bounded by word length); a >= 64-char word — here a
+    100-char URL — comes out as one piece flagged by a NULL score
+    instead of failing the query, and the other words are unaffected."""
     from legal_document_ocr_spark.operators import textops
 
-    long_word = "ab" * 32  # 64 chars
+    url = "https://example.com/" + "a1b2c" * 16
+    assert len(url) == 100
     docs = spark.createDataFrame(
-        [(1, long_word + " ok")], "doc_id long, text string"
+        [(1, url + " ok ok"), (2, "ok")], "doc_id long, text string"
     )
-    with _pytest.raises(Exception, match="mod-64"):
-        textops.unigram_segment(docs).collect()
+    rows = {r["word"]: r for r in textops.unigram_segment(docs).collect()}
+    assert rows[url]["n_pieces"] == 1
+    assert rows[url]["best_micro"] is None
+    assert rows[url]["n"] == 1
+    assert rows["ok"]["n"] == 3
+    assert rows["ok"]["best_micro"] is not None
 
 
 def test_robots_meta_scan_accepts_reversed_attribute_order(spark):
