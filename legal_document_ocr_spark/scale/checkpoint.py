@@ -15,10 +15,12 @@ app/services/document_service.py:48-50,79):
   job never yields partial reads (single-writer rename-commit, the same
   atomicity contract an Iceberg snapshot commit gives on a real catalog);
 - the manifest carries per-partition lineage + counters (partition_id, rows,
-  url min/max; no byte counts), gathered by a second, column-pruned scan
-  that reads the just-written files back and groups them by the
-  ``partition_id`` column stamped at write time — so the counters describe
-  exactly what was committed;
+  url min/max; no byte counts), taken on the driver from the footers of the
+  parquet files the write just produced (row counts and column statistics
+  of the ``partition_id`` column stamped at write time and of ``url``), so
+  the counters describe exactly what was committed and cost no Spark job;
+  a file whose footer lacks url statistics (parquet drops them for values
+  over 4 KB) has its two columns read back with pyarrow instead;
 - resume = ``pages.join(done_urls, 'url', 'left_anti')`` — only urls never
   committed are recomputed; re-running a finished job is a no-op.
 """
@@ -137,6 +139,10 @@ class CheckpointStore:
         run_id or a snapshot_seq — only runs committed up to and including
         that snapshot are read.
         """
+        paths = self._run_paths(as_of)
+        return spark.read.parquet(*paths) if paths else None
+
+    def _run_paths(self, as_of: str | int | None = None) -> list[str]:
         ms = self.manifests()
         if as_of is not None:
             cut = [
@@ -149,16 +155,15 @@ class CheckpointStore:
             if ms[cut[0]].get("expired"):
                 raise ValueError(f"snapshot {as_of!r} has been expired")
             ms = ms[: cut[0] + 1]
-        if not ms:
-            return None
-        paths = [
-            os.path.join(self.runs_dir, f"run_id={m['run_id']}") for m in ms
-        ]
-        return spark.read.parquet(*paths)
+        return [os.path.join(self.runs_dir, f"run_id={m['run_id']}") for m in ms]
 
     def done_urls(self, spark: SparkSession) -> DataFrame | None:
-        results = self.read_results(spark)
-        return None if results is None else results.select("url").distinct()
+        paths = self._run_paths()
+        if not paths:
+            return None
+        # a given schema skips parquet schema inference, a Spark job that
+        # reads footers on every call (once per streaming trigger)
+        return spark.read.schema("url string").parquet(*paths).distinct()
 
     def filter_pending(self, pages: DataFrame) -> DataFrame:
         """Resume anti-join: keep only urls not yet committed."""
@@ -174,20 +179,9 @@ class CheckpointStore:
         out_dir = os.path.join(self.runs_dir, f"run_id={run_id}")
         staged = result.withColumn("partition_id", F.spark_partition_id())
         staged.write.mode("errorifexists").parquet(out_dir)
-        # lineage + counters read back from the just-written files: one cheap
-        # column-pruned scan, and the stats describe exactly what was committed
-        written = result.sparkSession.read.parquet(out_dir)
-        lineage = [
-            row.asDict()
-            for row in written.groupBy("partition_id")
-            .agg(
-                F.count("*").alias("rows"),
-                F.min("url").alias("url_min"),
-                F.max("url").alias("url_max"),
-            )
-            .orderBy("partition_id")
-            .collect()
-        ]
+        # lineage + counters from the just-written files' footers, on the
+        # driver: the write is the run's only Spark job
+        lineage = _lineage_from_files(out_dir)
         manifest = {
             "run_id": run_id,
             "snapshot_seq": len(self.committed_run_ids()) + 1,
@@ -200,6 +194,69 @@ class CheckpointStore:
             json.dump(manifest, f, indent=2)
         os.rename(tmp, os.path.join(self.manifest_dir, f"{run_id}.json"))
         return manifest
+
+
+def _file_lineage(path: str) -> dict[int, tuple[int, str | None, str | None]]:
+    """``{partition_id: (rows, url_min, url_max)}`` of one parquet file.
+
+    A write task writes only its own partition, so a file normally holds a
+    single ``partition_id`` and its footer answers everything. A file whose
+    footer cannot (no url min/max: a value over parquet's 4 KB statistics
+    cap, or only nulls) has its two columns read instead.
+    """
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(path)
+    if not meta.num_rows:  # an empty write leaves one schema-only file
+        return {}
+    col = {meta.schema.column(j).path: j for j in range(meta.num_columns)}
+    groups = [meta.row_group(i) for i in range(meta.num_row_groups)]
+    pids = [g.column(col["partition_id"]).statistics for g in groups]
+    urls = [g.column(col["url"]).statistics for g in groups]
+    if all(s is not None and s.has_min_max for s in pids + urls) and (
+        len({s.min for s in pids} | {s.max for s in pids}) == 1
+    ):
+        return {
+            pids[0].min: (
+                sum(g.num_rows for g in groups),
+                min(s.min for s in urls),
+                max(s.max for s in urls),
+            )
+        }
+    table = pq.read_table(path, columns=["partition_id", "url"]).to_pydict()
+    out: dict[int, tuple[int, str | None, str | None]] = {}
+    for pid, url in zip(table["partition_id"], table["url"]):
+        out[pid] = _merge_lineage(out.get(pid), (1, url, url))
+    return out
+
+
+def _merge_lineage(a, b):
+    """Combine two ``(rows, url_min, url_max)``; min/max skip nulls, as
+    Spark's ``F.min``/``F.max`` do."""
+    if a is None:
+        return b
+    return (
+        a[0] + b[0],
+        min((u for u in (a[1], b[1]) if u is not None), default=None),
+        max((u for u in (a[2], b[2]) if u is not None), default=None),
+    )
+
+
+def _lineage_from_files(out_dir: str) -> list[dict]:
+    """Per-partition lineage of a written run, in ``partition_id`` order:
+    what ``groupBy("partition_id").agg(count, min(url), max(url))`` over
+    the run's files returns. Python string order is code-point order,
+    which is the UTF-8 byte order Spark and parquet compare strings by."""
+    merged: dict[int, tuple[int, str | None, str | None]] = {}
+    for name in sorted(os.listdir(out_dir)):
+        if name.startswith(("_", ".")):  # _SUCCESS, .crc: Spark skips them too
+            continue
+        for pid, part in _file_lineage(os.path.join(out_dir, name)).items():
+            merged[pid] = _merge_lineage(merged.get(pid), part)
+    return [
+        {"partition_id": pid, "rows": rows, "url_min": lo, "url_max": hi}
+        for pid, (rows, lo, hi) in sorted(merged.items())
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -252,8 +309,8 @@ class IcebergCheckpointStore:
     swapping the stand-in for a catalog table is a constructor change:
 
     - ``commit``        -> ``df.writeTo(table).append()`` (one Iceberg
-      snapshot == one run manifest; lineage counters come from the same
-      groupBy(spark_partition_id()) aggregation);
+      snapshot == one run manifest; lineage counters come from a
+      groupBy(partition_id) over an incremental scan of that snapshot);
     - ``filter_pending``-> LEFT ANTI join against the table's url set;
     - ``read_results``  -> plain scan, or time travel via
       ``VERSION AS OF <snapshot_id>`` when ``as_of`` is passed;
@@ -276,11 +333,24 @@ class IcebergCheckpointStore:
         return [r["snapshot_id"] for r in rows]
 
     def commit(self, result: DataFrame, run_id: str | None = None) -> dict:
+        before = self.snapshot_ids()
         staged = result.withColumn("partition_id", F.spark_partition_id())
         staged.writeTo(self.table).append()
+        snapshot_id = self.snapshot_ids()[-1]
+        # lineage from the snapshot just written (an incremental scan of its
+        # appended files), not from ``staged``: re-aggregating the un-cached
+        # frame would run the whole pipeline a second time
+        written = self.spark.read.format("iceberg")
+        if before:
+            written = written.option("start-snapshot-id", before[-1]).option(
+                "end-snapshot-id", snapshot_id
+            )
+        else:
+            written = written.option("snapshot-id", snapshot_id)
         lineage = [
             row.asDict()
-            for row in staged.groupBy("partition_id")
+            for row in written.load(self.table)
+            .groupBy("partition_id")
             .agg(
                 F.count("*").alias("rows"),
                 F.min("url").alias("url_min"),
@@ -290,7 +360,7 @@ class IcebergCheckpointStore:
             .collect()
         ]
         return {
-            "snapshot_id": self.snapshot_ids()[-1],
+            "snapshot_id": snapshot_id,
             "total_rows": sum(p["rows"] for p in lineage),
             "partitions": lineage,
         }

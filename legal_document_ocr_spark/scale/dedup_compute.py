@@ -13,8 +13,9 @@ Plan shape (and why it scales):
   short fixed-width key (map-side combine collapses duplicates before the
   exchange — the multi-MB payload crosses the wire once per distinct value,
   carried by the first() aggregate);
-- the join-back is a plain equi-join on the same short key; with AQE enabled
-  Spark picks broadcast when the distinct side is small, sort-merge otherwise.
+- the join-back is an equi-join on the same short key, hinted
+  ``shuffle_hash`` so neither AQE nor the planner turns it into a broadcast
+  of the computed side or a sort-merge (see the comment at the join).
 """
 
 from __future__ import annotations

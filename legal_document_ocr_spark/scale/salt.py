@@ -29,6 +29,11 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     arrive with thousands of partitions and this is a no-op; below the
     session's default parallelism it inserts one round-robin exchange so the
     heavy stage actually uses the cluster.
+
+    The partition probe is not free: ``df.rdd`` prepares the physical plan,
+    and with AQE an input that contains an exchange (a join, an aggregate)
+    runs that input's shuffle stages as Spark jobs just to learn the final
+    partition count. Place it on scans, not behind a shuffle.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:

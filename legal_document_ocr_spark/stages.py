@@ -159,10 +159,6 @@ def run_extraction(
         df = checkpoint.filter_pending(df)
     if salt:
         df = salted_repartition(df, salt_partitions)
-    else:
-        # narrow inputs (single-file local scans) would serialize the UDF
-        # stages on one core; no-op when the scan is already parallel
-        df = ensure_parallelism(df)
 
     def compute(distinct: DataFrame) -> DataFrame:
         return distinct.withColumn("_page", extract_page_udf(F.col("html")))
@@ -170,9 +166,12 @@ def run_extraction(
     if dedup == "auto":
         dedup = estimate_distinct_ratio(df) <= DEDUP_AUTO_THRESHOLD
     if dedup:
+        # dedup's hash exchange already spreads a narrow input
         extracted = dedup_compute(df, "html", compute)
     else:
-        extracted = compute(df)
+        # narrow inputs (single-file local scans) would serialize the UDF
+        # stages on one core; no-op when the scan is already parallel
+        extracted = compute(df if salt else ensure_parallelism(df))
     # drop the byte-dominant binary column as early as possible
     extracted = extracted.drop("html").select("*", "_page.*").drop("_page")
     if with_fields:

@@ -346,17 +346,24 @@ def stream_extraction(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         import uuid
 
-        # resume filter FIRST (url anti-join, no UDF — cheap to test for
-        # emptiness), so re-streaming an already-committed directory is a
-        # no-op instead of an empty or colliding commit; run ids are unique
-        # per micro-batch attempt (batch numbering restarts across queries)
-        pending = checkpoint_store.filter_pending(batch_df)
-        if not pending.limit(1).count():
-            return
-        result = run_extraction(pending)
-        checkpoint_store.commit(
-            result, run_id=f"stream-{batch_id:04d}-{uuid.uuid4().hex[:8]}"
-        )
+        # resume filter FIRST (url anti-join, no UDF), persisted so each of
+        # its partitions is computed once: the emptiness test caches what it
+        # reads and the extraction reads the cache (plus any partition the
+        # test did not reach) instead of re-running the source scan and the
+        # anti-join. An empty batch returns before any commit, so
+        # re-streaming an already-committed directory is a no-op instead of
+        # an empty or colliding commit. Run ids are unique per micro-batch
+        # attempt (batch numbering restarts across queries).
+        pending = checkpoint_store.filter_pending(batch_df).persist()
+        try:
+            if pending.isEmpty():
+                return
+            checkpoint_store.commit(
+                run_extraction(pending),
+                run_id=f"stream-{batch_id:04d}-{uuid.uuid4().hex[:8]}",
+            )
+        finally:
+            pending.unpersist()
 
     writer = stream.writeStream.foreachBatch(process_batch).trigger(
         availableNow=True

@@ -120,6 +120,71 @@ class TestCheckpointResume:
         for p in manifest["partitions"]:
             assert p["url_min"] <= p["url_max"]
 
+    def test_manifest_lineage_equals_readback_oracle(self, spark, tmp_path):
+        """The manifest is built from the written files' footers; it must
+        equal a groupBy read-back of those files byte for byte, including a
+        file whose url statistics parquet dropped (a url over 4 KB), a null
+        url and non-ASCII urls (string order = UTF-8 byte order)."""
+        import json
+        import os
+
+        import pyarrow.parquet as pq
+
+        store = CheckpointStore(str(tmp_path / "lineage"))
+        long_url = "https://a.example.com/" + "x" * 5200
+        rows = [(f"https://h{i % 5}.example.com/ð{i}/", f"t{i}") for i in range(40)]
+        rows += [(long_url, "long"), (None, "null url"), ("https://ü.example/", "u")]
+        df = spark.createDataFrame(rows, "url string, extracted_text string")
+        manifest = store.commit(df.repartition(4), run_id="lineage")
+
+        run_dir = os.path.join(store.runs_dir, "run_id=lineage")
+        written = spark.read.parquet(run_dir)
+        oracle = [
+            r.asDict()
+            for r in written.groupBy("partition_id")
+            .agg(
+                F.count("*").alias("rows"),
+                F.min("url").alias("url_min"),
+                F.max("url").alias("url_max"),
+            )
+            .orderBy("partition_id")
+            .collect()
+        ]
+        assert len(oracle) == 4
+        assert json.dumps(manifest["partitions"]) == json.dumps(oracle)
+        assert manifest["total_rows"] == written.count() == len(rows)
+        with open(os.path.join(store.manifest_dir, "lineage.json")) as f:
+            assert json.load(f) == manifest
+        # the long url's file really had no url min/max in its footer
+        url_stats = [
+            pq.read_metadata(os.path.join(run_dir, name)).row_group(0).column(0).statistics
+            for name in os.listdir(run_dir)
+            if name.endswith(".parquet")
+        ]
+        assert any(not s.has_min_max for s in url_stats)
+        assert long_url in {p["url_min"] for p in manifest["partitions"]}
+
+    def test_restream_of_committed_dir_writes_nothing(self, spark, tmp_path):
+        """A second stream over a fully committed directory commits no run:
+        no new ``runs/run_id=*`` directory and no new manifest."""
+        import os
+
+        from legal_document_ocr_spark.stages import valid_pages
+        from legal_document_ocr_spark.streaming.pipeline import stream_extraction
+
+        pages_dir = str(tmp_path / "pages")
+        valid_pages(fixture_pages_df(spark)).repartition(2).write.parquet(pages_dir)
+        store = CheckpointStore(str(tmp_path / "store"))
+        stream_extraction(spark, pages_dir, store).awaitTermination()
+        runs, manifests = os.listdir(store.runs_dir), store.committed_run_ids()
+        assert runs and manifests
+
+        stream_extraction(
+            spark, pages_dir, store, max_files_per_trigger=1
+        ).awaitTermination()
+        assert sorted(os.listdir(store.runs_dir)) == sorted(runs)
+        assert store.committed_run_ids() == manifests
+
 
 class TestTimeTravel:
     def test_as_of_snapshot(self, spark, tmp_path):
