@@ -5,11 +5,8 @@ Default mode prints ONE JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {<name>: sec, ...}, "sf": <sf>, ...extras}
 
---scaling mode runs the flagship extraction pipeline at two parallelism
-levels (local[8] vs local[32]) on identical input and reports throughput at
-both plus scaling efficiency = T8/T32/4 — the sandbox evidence protocol for
-the north rule's "efficiency >= 0.8 from N to 4N executors" (BASELINE.md §
-evidence; a real cluster would use spark-submit at N and 4N executors).
+Per-layer timing, scaling efficiency and task skew of the flagship
+pipeline come from the ledger of ``perfbench/run.py --trace 1``.
 
 Every query is forced end-to-end with the noop sink (full column
 materialization — a .count() would let Catalyst prune the UDF columns and
@@ -20,7 +17,6 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 import time
 
 from legal_document_ocr_spark.session import build_session
@@ -73,7 +69,6 @@ HEADLINE = [
     # round-4 additions
     "cdc_chunks",             # content-defined chunking (zero-shuffle HOFs)
     "webp_decode",            # real lossless-WebP/VP8L decode (mapInPandas)
-    "webp_lossy_decode",      # round-5: real lossy-VP8 intra decode (vp8.py)
     "audio_features",         # integer-exact PCM quality gauges
     "video_frames",           # real AVI/RIFF frame extraction (mapInPandas)
     "volume_shipping",        # TPC-H Q7 fact-fact shuffle_hash + dim broadcasts
@@ -247,158 +242,5 @@ def main_bench() -> None:
     print(json.dumps(out))
 
 
-def main_scaling() -> None:
-    """local[8] vs local[32] on identical input -> scaling efficiency.
-
-    Uses a replicated corpus (distinct payloads) sized so kernel compute
-    dominates fixed costs — a 5k-doc job finishes in ~3 s of scheduling +
-    Arrow overhead at ANY core count and measures nothing. Replicas default
-    to 20x (100k pages at sf0.1).
-    """
-    from legal_document_ocr_spark.sources.pages import synthesize_scaled_pages_df
-    from legal_document_ocr_spark.stages import run_extraction
-
-    replicas = int(os.environ.get("SPARK_GRAFT_SCALE_REPL", "20"))
-    n_small = int(os.environ.get("SPARK_GRAFT_SCALE_N", "8"))
-    levels = (n_small, n_small * 4)
-    results: dict[str, float | int] = {}
-    for cores in levels:
-        spark = build_session(
-            app_name=f"ldos-scale-{cores}", master=f"local[{cores}]"
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        pages = synthesize_scaled_pages_df(spark, SF_DIR, replicas)
-        n_docs = pages.count()
-
-        def one_run() -> float:
-            t0 = time.time()
-            _force(run_extraction(pages, dedup=True, with_fields=True))
-            return time.time() - t0
-
-        one_run()  # warmup: python workers + code paths
-        best = min(one_run() for _ in range(2))
-        results["docs"] = n_docs
-        results[f"t_{cores}"] = round(best, 3)
-        results[f"throughput_{cores}"] = round(n_docs / best, 1)
-        spark.stop()
-    t_n, t_4n = results[f"t_{levels[0]}"], results[f"t_{levels[1]}"]
-    results["n"] = levels[0]
-    results["efficiency"] = round(t_n / t_4n / 4.0, 3)
-    results["speedup"] = round(t_n / t_4n, 2)
-    results["sf"] = _sf_of(SF_DIR)
-    results["replicas"] = replicas
-    print(json.dumps(results))
-
-
-def main_stages() -> None:
-    """Per-stage timing decomposition of the flagship pipeline (BASELINE.md
-    'per-stage metrics'): each stage is timed as the delta between nested
-    pipeline configurations on the same input."""
-    from legal_document_ocr_spark.merge import merge_documents
-    from legal_document_ocr_spark.sources.pages import synthesize_scaled_pages_df
-    from legal_document_ocr_spark.stages import run_extraction
-
-    replicas = int(os.environ.get("SPARK_GRAFT_SCALE_REPL", "20"))
-    spark = build_session(app_name="ldos-stages", master=f"local[{CPUS}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    pages = synthesize_scaled_pages_df(spark, SF_DIR, replicas)
-    n = pages.count()
-
-    def timed(df) -> float:
-        _force(df)  # warm
-        t0 = time.time()
-        _force(df)
-        return time.time() - t0
-
-    t_scan = timed(pages)
-    t_extract = timed(run_extraction(pages, dedup=False, with_fields=False))
-    t_fields = timed(run_extraction(pages, dedup=False, with_fields=True))
-    t_dedup = timed(run_extraction(pages, dedup=True, with_fields=True))
-    t_merge = timed(
-        merge_documents(run_extraction(pages, dedup=False, with_fields=True))
-    )
-    out = {
-        "docs": n,
-        "scan_synthesize_sec": round(t_scan, 3),
-        "extract_stage_sec": round(t_extract - t_scan, 3),
-        "fields_stage_sec": round(t_fields - t_extract, 3),
-        "dedup_overhead_sec": round(t_dedup - t_fields, 3),
-        "merge_stage_sec": round(t_merge - t_fields, 3),
-        "end_to_end_sec": round(t_dedup, 3),
-        "docs_per_sec": round(n / t_dedup, 1),
-        "sf": _sf_of(SF_DIR),
-        "cpus": int(CPUS),
-    }
-    spark.stop()
-    print(json.dumps(out))
-
-
-def main_skew() -> None:
-    """Skew demonstration (north_rule 'salted repartitioning on domain/size
-    buckets'): a corpus where one domain owns 80% of pages at 5x the size,
-    arriving partitioned BY DOMAIN (the layout a per-domain crawl store
-    produces). Naive = keep that partitioning through the UDF stage (one
-    straggler task does most of the work); salted = repartition on
-    (domain, size_bucket, salt) first."""
-    from pyspark.sql import functions as F
-
-    from legal_document_ocr_spark.sources.pages import synthesize_scaled_pages_df
-    from legal_document_ocr_spark.stages import run_extraction
-
-    spark = build_session(app_name="ldos-skew", master="local[8]",
-                          shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    base = synthesize_scaled_pages_df(spark, SF_DIR, 4)
-    # 80% of urls rehomed to one megasite with 5x payloads
-    hot = F.xxhash64("url") % 10 < 8
-    pages = base.select(
-        F.when(
-            hot,
-            F.concat(F.lit("https://megasite.example.com/"), F.sha2("url", 256)),
-        )
-        .otherwise(F.col("url"))
-        .alias("url"),
-        "warc_ts",
-        F.when(hot, F.concat(*([F.col("html")] * 5))).otherwise(F.col("html")).alias("html"),
-        "text",
-        "lang",
-    )
-    domain = F.regexp_extract("url", r"^https://([^/]+)/", 1)
-    by_domain = pages.repartition(8, domain)
-
-    def timed(df, **kw) -> float:
-        run_extraction(df, dedup=False, with_fields=False, **kw).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        t0 = time.time()
-        run_extraction(df, dedup=False, with_fields=False, **kw).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        return time.time() - t0
-
-    t_naive = timed(by_domain)                 # domain partitioning persists
-    t_salted = timed(by_domain, salt=True)     # salted repartition first
-    n = pages.count()
-    print(
-        json.dumps(
-            {
-                "docs": n,
-                "naive_domain_partitioned_sec": round(t_naive, 3),
-                "salted_sec": round(t_salted, 3),
-                "speedup": round(t_naive / t_salted, 2),
-                "sf": _sf_of(SF_DIR),
-            }
-        )
-    )
-    spark.stop()
-
-
 if __name__ == "__main__":
-    if "--scaling" in sys.argv:
-        main_scaling()
-    elif "--stages" in sys.argv:
-        main_stages()
-    elif "--skew" in sys.argv:
-        main_skew()
-    else:
-        main_bench()
+    main_bench()

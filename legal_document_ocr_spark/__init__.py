@@ -7,8 +7,9 @@ over Common-Crawl-style web-page tables:
 
 - input contract:  ``pages(url string, warc_ts timestamp, html binary,
   text string, lang string)``
-- output contract: ``(url, extracted_text string, spans array<struct>,
-  tables array<struct>, fields struct, lineage struct)``
+- output contract: ``(url, warc_ts, lang, extracted_text string,
+  spans array<struct>, tables array<struct>, n_blocks int, n_kept int,
+  fields struct, lineage struct)``
 - per-url invariant: extracted_text is byte-identical to the pure-pandas
   oracle (shared kernels — see ``kernels.py``).
 

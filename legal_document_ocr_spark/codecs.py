@@ -9,8 +9,7 @@ grayscale/YCbCr, 4:2:0, restart markers) and a GIF decoder (LZW +
 interlace + palette below); round 4 added baseline TIFF (the reference
 whitelist's last unhandled image format) and lossless WebP (vp8l.py —
 canonical prefix codes, LZ77, color cache, all four inverse transforms),
-and round 5 added lossy-VP8 intra keyframes (vp8.py), so the stub now
-covers only video essence.
+so the stub now covers only lossy WebP (VP8) and video essence.
 
 Scope: non-interlaced 8-bit-depth PNG in grayscale (color type 0), RGB (2)
 and RGBA (6) with all five scanline filters; uncompressed 24-bit BMP;
@@ -416,13 +415,13 @@ def encode_wav_g711(
 
 def decode_image(payload: bytes) -> dict:
     """Dispatch by magic bytes. PNG/BMP/baseline-JPEG/GIF/TIFF/ICO and
-    BOTH WebP flavors decode for real (jpeg.py: Huffman + IDCT,
+    lossless WebP decode for real (jpeg.py: Huffman + IDCT,
     grayscale/YCbCr, all samplings, restart markers; decode_gif below:
     LZW + interlace + palette; decode_tiff below: none/PackBits/LZW/
     deflate strips, both byte orders; decode_ico below: largest-member
-    election; vp8l.py: lossless WebP; vp8.py round 5: lossy-VP8 intra
-    keyframes incl. all B_PRED submodes and the normal loop filter);
-    video frame essence still needs an external codec."""
+    election; vp8l.py: lossless WebP). Lossy-VP8 WebP raises
+    NotImplementedError naming it; video frame essence still needs an
+    external codec."""
     if payload[:8] == _PNG_SIG:
         return decode_png(payload)
     if payload[:2] == b"BM":
@@ -442,9 +441,9 @@ def decode_image(payload: bytes) -> dict:
     if payload[:4] == b"\x00\x00\x01\x00":
         return decode_ico(payload)
     raise NotImplementedError(
-        "only PNG, BMP, baseline JPEG, GIF, TIFF, ICO and WebP (lossless "
-        "VP8L + lossy-VP8 intra keyframes) decode without an external "
-        "codec library (video essence needs cv2/ffmpeg)"
+        "only PNG, BMP, baseline JPEG, GIF, TIFF, ICO and lossless WebP "
+        "(VP8L) decode without an external codec library (lossy-VP8 WebP "
+        "and video need PIL/cv2/ffmpeg)"
     )
 
 

@@ -14,9 +14,9 @@ BMP, PCM WAV); PIL/cv2/ffmpeg remain absent, so:
   fake decode (dimensions derived from the content hash) so the stage works
   on payloads of ANY format, decodable or not;
 - ``decode_image`` — raises ``NotImplementedError`` only for library-bound
-  formats (video essence); baseline JPEG (jpeg.py) and GIF (LZW) are real
-  since round 3, TIFF and lossless WebP (vp8l.py) since round 4, lossy
-  VP8 (vp8.py) since round 5;
+  formats (lossy-VP8 WebP, video essence); baseline JPEG (jpeg.py) and GIF
+  (LZW) are real since round 3, TIFF and lossless WebP (vp8l.py) since
+  round 4;
 - ``audio_features`` — integer-exact energy/peak/zero-crossing gauges over
   decoded PCM (round 4).
 
@@ -56,15 +56,13 @@ MEDIA_FEATURE_SCHEMA = StructType(
 def decode_image(payload: bytes) -> dict:
     """REAL image decode for PNG, BMP (codecs.py: zlib/struct, all five PNG
     scanline filters, 24-bit BMP), baseline JPEG (jpeg.py), GIF
-    (codecs.decode_gif: LZW + interlace + palette) and TIFF
+    (codecs.decode_gif: LZW + interlace + palette), TIFF
     (codecs.decode_tiff: uncompressed/PackBits strips, both byte orders —
-    round 4, closing the reference whitelist's last image format:
-    /root/reference/app/utils/validation.py:10) and lossless WebP
-    (vp8l.py: canonical prefix codes, LZ77 + color cache, all four
-    inverse transforms — also round 4) and lossy-VP8 intra keyframes
-    (vp8.py — round 5). Formats that genuinely need an external library
-    (video essence) still raise NotImplementedError — the stub now
-    covers only those.
+    round 4, closing the reference whitelist's last image format) and
+    lossless WebP (vp8l.py: canonical prefix codes, LZ77 + color cache,
+    all four inverse transforms — also round 4). Formats that genuinely
+    need an external library (lossy-VP8 WebP, video essence) raise
+    NotImplementedError naming the format.
     """
     from ..codecs import decode_image as _decode
 

@@ -1065,79 +1065,6 @@ FROM documents
 """
 
 
-def q_webp_lossy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL lossy-WebP (VP8) intra-keyframe decode roundtrip (vp8.py via
-    multimodal.image_decode — round 5, retiring the last image-format
-    stub): synthesize one VP8 keyframe per document at a non-macroblock-
-    aligned size (width 24 + d%16, height 20 + d%12, so the edge-
-    replication padding and crop paths run), macroblock k's luma
-    constant at (d*37 + k*59) % 256 with chroma flat 128, cycling all
-    four 16x16 intra predictors (ymode d%4, uvmode (3d)%4); encode at
-    qindex 0 with the paired CLOSED-LOOP encoder and decode through the
-    full bool-coder / token-context / IWHT+IDCT / predictor path.
-    Macroblock-constant sources at qindex 0 roundtrip pixel-exactly
-    (constant residuals quantize losslessly through the Y2 layer —
-    vp8.py docstring) and flat-128 chroma makes the JFIF conversion
-    exact gray (r=g=b=Y), so the oracle restates the synthesis closed
-    form: px_sum = 3 * Σ_pixels (d*37 + mb_index*59) % 256."""
-    import pandas as _pd
-
-    from ..vp8 import encode_webp_lossy
-
-    def _synth(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = 24 + d % 16
-                h = 20 + d % 12
-                mb_cols = (w + 15) >> 4
-                y = bytes(
-                    (d * 37 + ((yy >> 4) * mb_cols + (xx >> 4)) * 59) % 256
-                    for yy in range(h)
-                    for xx in range(w)
-                )
-                uvw, uvh = (w + 1) >> 1, (h + 1) >> 1
-                flat = bytes([128]) * (uvw * uvh)
-                webp, _recon = encode_webp_lossy(
-                    w, h, y, flat, flat,
-                    qindex=0, ymode=d % 4, uvmode=(3 * d) % 4,
-                )
-                payloads.append(webp)
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    pages = _spread(_docs(spark, sf_dir).select("doc_id"))
-    payloads = pages.mapInPandas(
-        _synth,
-        StructType(
-            [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-        ),
-    )
-    return multimodal.image_decode(payloads)
-
-
-_SQL_WEBP_LOSSY_DECODE = """
-SELECT doc_id,
-  (24 + doc_id % 16)::int AS width,
-  (20 + doc_id % 12)::int AS height,
-  'RGB' AS mode,
-  (3 * list_sum(flatten(list_transform(range((20 + doc_id % 12)::int), y ->
-    list_transform(range((24 + doc_id % 16)::int), x ->
-      (doc_id * 37
-       + ((y // 16) * ((24 + doc_id % 16 + 15) // 16) + (x // 16)) * 59)
-      % 256)))))::bigint AS px_sum,
-  NULL::varchar AS error
-FROM documents
-"""
-
-
 def q_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossless-WebP (VP8L) decode roundtrip (vp8l.py via
     multimodal.image_decode — round 4, retiring the WebP half of the last

@@ -9,8 +9,9 @@ job as the pipeline action. At 100 TB the alternative — a separate
 is free: it folds into the existing whole-stage-codegen pass and surfaces
 driver-side after any action on the observed frame.
 
-Stage *timing* lives in ``bench.py --stages`` (wall-clock per pipeline
-stage); this module owns row-level lineage counters.
+Stage *timing* lives in the per-layer ledger of
+``perfbench/run.py --trace 1`` (Spark event-log task metrics and spans);
+this module owns row-level lineage counters.
 """
 
 from __future__ import annotations

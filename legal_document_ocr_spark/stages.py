@@ -3,9 +3,10 @@
 The rebuild of the reference's per-page pipeline (app/services/ocr_service.py:
 107-148) as Spark stages (SURVEY.md §3.1 "Spark trace"):
 
-    scan -> native filters (P1) -> salted repartition -> dedup-by-hash ->
-    [UDF stage: decode/normalize K1 + layout-detect K2/K5-K7 + text-extract
-    K4/A2] -> [UDF stage: field battery K9-K13] -> lineage -> sink
+    scan -> native filters (P1) -> [salted repartition, salt=True only] ->
+    dedup-by-hash -> [UDF stage: decode/normalize K1 + layout-detect
+    K2/K5-K7 + text-extract K4/A2] -> [UDF stage: field battery K9-K13] ->
+    lineage -> sink
 
 Design decisions:
 - both heavy stages are scalar ITERATOR pandas UDFs (Iterator[Series] ->
@@ -144,7 +145,9 @@ def run_extraction(
     checkpoint=None,
 ) -> DataFrame:
     """The flagship pipeline: pages -> (url, warc_ts, lang, extracted_text,
-    spans, tables, fields, lineage).
+    spans, tables, n_blocks, n_kept, fields, lineage). ``n_blocks`` /
+    ``n_kept`` count the page's text blocks before and after the density
+    filter; ``fields`` is present only with ``with_fields=True``.
 
     ``dedup``: True = always dedup-before-compute; False = never;
     ``"auto"`` = estimate the corpus dup ratio from a payload sample and skip

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.pages import PAGES_SCHEMA
-from ..stages import run_extraction
+from ..stages import run_extraction, valid_pages
 
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, "
@@ -346,15 +346,18 @@ def stream_extraction(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         import uuid
 
-        # resume filter FIRST (url anti-join, no UDF), persisted so each of
-        # its partitions is computed once: the emptiness test caches what it
-        # reads and the extraction reads the cache (plus any partition the
-        # test did not reach) instead of re-running the source scan and the
-        # anti-join. An empty batch returns before any commit, so
-        # re-streaming an already-committed directory is a no-op instead of
-        # an empty or colliding commit. Run ids are unique per micro-batch
-        # attempt (batch numbering restarts across queries).
-        pending = checkpoint_store.filter_pending(batch_df).persist()
+        # input validation, then the resume filter (url anti-join, no UDF),
+        # persisted so each of its partitions is computed once: the
+        # emptiness test caches what it reads and the extraction reads the
+        # cache (plus any partition the test did not reach) instead of
+        # re-running the source scan and the anti-join. Invalid pages never
+        # commit, so validating first keeps them from making an
+        # otherwise-committed batch look pending. An empty batch returns
+        # before any commit, so re-streaming an already-committed directory
+        # is a no-op instead of an empty or colliding commit. Run ids are
+        # unique per micro-batch attempt (batch numbering restarts across
+        # queries).
+        pending = checkpoint_store.filter_pending(valid_pages(batch_df)).persist()
         try:
             if pending.isEmpty():
                 return

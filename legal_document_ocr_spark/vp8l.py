@@ -3,9 +3,10 @@
 WebP is the dominant modern web image format; round 3 left it as the
 declared stub. Lossless WebP (VP8L) is Huffman + LZ77 + color cache +
 four reversible transforms — no DCT, no float — so it is pure-integer
-stdlib work, same as the GIF/JPEG/TIFF decoders. Lossy WebP (VP8 intra
-keyframes) decodes for real since round 5 (vp8.py), dispatched from
-``decode_webp`` below.
+stdlib work, same as the GIF/JPEG/TIFF decoders. Lossy WebP (VP8) is
+not decoded: ``decode_webp`` below raises NotImplementedError naming it,
+because a VP8 decoder needs the RFC 6386 probability and quantizer
+tables, which this package does not carry.
 
 Implemented per the public "WebP Lossless Bitstream Specification":
 
@@ -636,9 +637,9 @@ def decode_vp8l_stream(data: bytes) -> dict:
 
 
 def decode_webp(payload: bytes) -> dict:
-    """RIFF/WEBP container walk -> VP8L (lossless) or VP8 (lossy intra,
-    vp8.py — round 5, incl. B_PRED + the normal loop filter) decode.
-    Animations stay declared NotImplementedError, never silent."""
+    """RIFF/WEBP container walk -> VP8L (lossless) decode. A lossy
+    (``VP8 ``) chunk raises NotImplementedError naming lossy WebP, never
+    a silent wrong answer."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
         raise ValueError("not a WebP file")
     pos = 12
@@ -651,9 +652,10 @@ def decode_webp(payload: bytes) -> dict:
         if fourcc == b"VP8L":
             return decode_vp8l_stream(data)
         if fourcc == b"VP8 ":
-            from .vp8 import decode_vp8_frame, yuv420_to_rgb
-
-            return yuv420_to_rgb(decode_vp8_frame(data))
+            raise NotImplementedError(
+                "lossy WebP (VP8) decode is not supported: it needs the "
+                "RFC 6386 coefficient tables (PIL/cv2)"
+            )
         pos += 8 + size + (size & 1)
     raise ValueError("WebP container has no VP8L or VP8 chunk")
 

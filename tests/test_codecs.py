@@ -109,27 +109,23 @@ def test_dispatch_jpeg_is_real_and_garbage_jpeg_is_valueerror():
     raise NotImplementedError."""
     with pytest.raises(ValueError):
         decode_image(b"\xff\xd8\xff\xe0jpegdata")
-    # both WebP flavors decode for real (VP8L round 4, VP8 round 5); a
-    # garbage 4-byte VP8 chunk is malformed input -> ValueError
+    # lossless WebP decodes for real since round 4; a well-formed LOSSY
+    # (VP8) keyframe is the declared library-bound descope and says so.
+    # Frame tag: keyframe bit clear, version 0, shown, first_part_size 10;
+    # then the 9d 01 2a start code and 14-bit width/height (16x16).
+    first_part = bytes(10)
+    tag = (1 << 4) | (len(first_part) << 5)
+    frame = (
+        tag.to_bytes(3, "little") + b"\x9d\x01\x2a"
+        + (16).to_bytes(2, "little") + (16).to_bytes(2, "little")
+        + first_part
+    )
     lossy = (
-        b"RIFF" + (20).to_bytes(4, "little") + b"WEBP"
-        + b"VP8 " + (4).to_bytes(4, "little") + b"\x00" * 4
+        b"RIFF" + (12 + len(frame)).to_bytes(4, "little") + b"WEBP"
+        + b"VP8 " + len(frame).to_bytes(4, "little") + frame
     )
-    with pytest.raises(ValueError):
+    with pytest.raises(NotImplementedError, match="lossy WebP"):
         decode_image(lossy)
-    # interframes are a declared VP8 boundary (need reference buffers)
-    from legal_document_ocr_spark.vp8 import encode_vp8_frame
-
-    y = bytes([7]) * 256
-    flat = bytes([128]) * 64
-    frame, _ = encode_vp8_frame(16, 16, y, flat, flat)
-    inter = (
-        b"RIFF" + (len(frame) + 12).to_bytes(4, "little") + b"WEBP"
-        + b"VP8 " + len(frame).to_bytes(4, "little")
-        + bytes([frame[0] | 1]) + frame[1:]
-    )
-    with pytest.raises(NotImplementedError):
-        decode_image(inter)
     # a bare fourcc with no chunk header is malformed, not "unsupported"
     with pytest.raises(ValueError):
         decode_image(b"RIFF\x00\x00\x00\x00WEBPVP8 ")

@@ -414,21 +414,29 @@ def test_image_decode_isolates_malformed_records(spark):
     rows = [
         (1, good),
         (2, good[:20]),              # truncated PNG
-        # garbage lossy-VP8 chunk: VP8 decodes for real since round 5,
-        # so a 4-byte body is malformed input (ValueError), not a stub
+        # any lossy-VP8 chunk is the declared unsupported format
         (3, b"RIFF\x10\x00\x00\x00WEBPVP8 \x04\x00\x00\x00abcd"),
         (4, None),                    # null payload -> skipped entirely
         (5, b"\xff\xd8\xff\xe0jpg"),  # garbage JPEG body
         (6, b"RIFF\x00\x00\x00\x00WEBP"),  # chunkless container -> malformed
+        # a real-format 16x16 VP8 keyframe: frame tag (keyframe,
+        # first_part_size 10), start code, 14-bit dims, partition bytes
+        (7, b"RIFF\x20\x00\x00\x00WEBPVP8 \x14\x00\x00\x00"
+            + ((1 << 4) | (10 << 5)).to_bytes(3, "little")
+            + b"\x9d\x01\x2a\x10\x00\x10\x00" + bytes(10)),
+        (8, good),                    # a good row after the lossy ones
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     out = {r["doc_id"]: r for r in multimodal.image_decode(df).collect()}
     assert out[1]["px_sum"] == 10 and out[1]["error"] is None
     assert out[2]["width"] is None and out[2]["error"].startswith("ValueError")
-    assert out[3]["error"].startswith("ValueError")
+    assert out[3]["error"].startswith("NotImplementedError: lossy WebP")
     assert 4 not in out
     assert out[5]["error"].startswith("ValueError")
     assert out[6]["error"].startswith("ValueError")
+    assert out[7]["width"] is None
+    assert out[7]["error"].startswith("NotImplementedError: lossy WebP")
+    assert out[8]["px_sum"] == 10 and out[8]["error"] is None
 
 
 def test_audio_decode_isolates_malformed_records(spark):

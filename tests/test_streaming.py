@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from legal_document_ocr_spark.scale.checkpoint import CheckpointStore
 from legal_document_ocr_spark.sources.pages import fixture_pages_df
-from legal_document_ocr_spark.stages import run_extraction
+from legal_document_ocr_spark.stages import run_extraction, valid_pages
 from legal_document_ocr_spark.streaming.pipeline import (
     stream_extraction,
     stream_windowed_counts,
@@ -283,8 +283,6 @@ def test_committing_batch_reads_its_file_once(spark, tmp_path):
     (it was 23 with both probes and a manifest read-back scan)."""
     import pyspark.sql.functions as F
 
-    from legal_document_ocr_spark.stages import valid_pages
-
     pages = valid_pages(fixture_pages_df(spark))
     first = pages.filter(F.crc32("url") % 3 == 0)
     second = pages.filter(F.crc32("url") % 3 != 0)
@@ -309,6 +307,33 @@ def test_committing_batch_reads_its_file_once(spark, tmp_path):
     # emptiness test, then the committing trigger's write
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
     assert 0 < len(jobs) <= 11
+
+
+def test_restream_with_invalid_pages_commits_nothing_new(spark, tmp_path):
+    """The raw fixture holds 2 pages that fail input validation and so never
+    commit. Re-streaming the directory must still find nothing pending:
+    passes 2 and 3 add no run directory and no manifest."""
+    import os
+
+    pages_dir = str(tmp_path / "pages")
+    fixture_pages_df(spark).write.parquet(pages_dir)
+    store = CheckpointStore(str(tmp_path / "store"))
+
+    def runs_and_manifests():
+        runs = os.listdir(store.runs_dir) if os.path.isdir(store.runs_dir) else []
+        return set(runs), set(store.committed_run_ids())
+
+    new_runs, new_manifests = [], []
+    for _ in range(3):
+        runs0, manifests0 = runs_and_manifests()
+        stream_extraction(spark, pages_dir, store).awaitTermination()
+        runs1, manifests1 = runs_and_manifests()
+        new_runs.append(sorted(runs1 - runs0))
+        new_manifests.append(sorted(manifests1 - manifests0))
+    assert len(new_runs[0]) == len(new_manifests[0]) == 1
+    assert new_runs[1:] == new_manifests[1:] == [[], []]
+    n_valid = valid_pages(fixture_pages_df(spark)).count()
+    assert store.manifests()[0]["total_rows"] == n_valid
 
 
 def test_rate_source_windowed_counts_smoke(spark, tmp_path):

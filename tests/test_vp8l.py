@@ -264,10 +264,9 @@ def test_webp_dispatch_and_hardening():
     for bad in (b"RIFFxxxxWEBP", b"nope", b"RIFF\x00\x00\x00\x00WAVE"):
         with pytest.raises(ValueError):
             decode_webp(bad)
-    # lossy VP8 decodes for real since round 5 (vp8.py); a garbage
-    # 4-byte VP8 chunk is malformed input -> ValueError, not silence
+    # lossy VP8 is a declared descope, not a crash or a silent wrong answer
     lossy = b"RIFF" + (20).to_bytes(4, "little") + b"WEBP" + b"VP8 " + (4).to_bytes(4, "little") + b"\x00" * 4
-    with pytest.raises(ValueError):
+    with pytest.raises(NotImplementedError, match="lossy WebP"):
         decode_webp(lossy)
     # dimension bomb rejected before allocation
     bw = _BitWriter()
