@@ -24,8 +24,8 @@ from legal_document_ocr_spark.stages import run_extraction
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the full extraction pipeline
-    (validate → sha2-dedup → decode/segment/extract UDF stage → field battery
-    → lineage) over the synthesized Common-Crawl-style pages corpus."""
+    (validate → sha2-dedup → one UDF stage: decode/segment/extract + field
+    battery → lineage) over the synthesized Common-Crawl-style pages corpus."""
     pages = synthesize_pages_df(spark, "/root/testdata/sf0.001")
     out = run_extraction(pages, dedup=True, with_fields=True)
     return out.select(

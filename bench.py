@@ -26,7 +26,7 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # headline set: flagship pipeline + one representative per operator family
 HEADLINE = [
-    "extract_main_text",      # full pipeline: validate→dedup→UDF stages
+    "extract_main_text",      # full pipeline: validate→dedup→UDF stage
     "extract_fields_vn",      # + field battery UDF
     "merge_documents_vn",     # + merge fold (applyInPandas)
     "pricing_summary",        # aggregation battery

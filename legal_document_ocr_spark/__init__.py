@@ -14,8 +14,8 @@ over Common-Crawl-style web-page tables:
   oracle (shared kernels — see ``kernels.py``).
 
 Architecture (idiomatic Spark, not a port):
-- all heavy per-row kernels run as vectorized Arrow/pandas UDF stages
-  (``stages.py``) — no per-row Python UDFs anywhere;
+- the heavy per-page kernels (page extraction + field battery) run in one
+  vectorized Arrow UDF stage (``stages.py``) — no per-row Python UDFs;
 - everything SQL-expressible is Catalyst expressions (``operators/``);
 - scale combinators (``scale/``): sha2 dedup-before-compute, salted
   repartitioning on domain/size buckets, checkpoint/resume with

@@ -11,8 +11,8 @@ whole pipeline can be written as a SQL statement over the pages table:
     FROM pages
     WHERE ldos_token_count(text) > 10
 
-Functions registered (all Arrow-vectorized iterator pandas UDFs or native
-expression builders — no row-at-a-time Python):
+Functions registered (Arrow-batched iterator UDFs: Arrow UDFs for the page
+and field kernels, pandas UDFs for the string helpers; plus one Python UDTF):
 
 - ``ldos_extract_page(html)  -> struct(extracted_text, spans, tables, ...)``
 - ``ldos_extract_text(html)  -> string`` (extracted_text only — cheaper wire)
@@ -28,18 +28,30 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StringType
 
-from ..kernels import clean_text, extract_page, normalize_match_text
-from ..stages import extract_fields_udf, extract_page_udf
+from ..kernels import clean_text, extract_fields, extract_page, normalize_match_text
+from ..stages import FIELDS_TYPE, extract_page_udf
+
+_FIELDS_ARROW_TYPE = to_arrow_type(FIELDS_TYPE)
 
 
 @pandas_udf(StringType())
 def _extract_text_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     for series in batches:
         yield pd.Series([extract_page(raw)["extracted_text"] for raw in series])
+
+
+@arrow_udf(FIELDS_TYPE)
+def _extract_fields_udf(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+    for arr in batches:
+        yield pa.array(
+            [extract_fields(t) for t in arr.to_pylist()], type=_FIELDS_ARROW_TYPE
+        )
 
 
 @pandas_udf(StringType())
@@ -83,7 +95,7 @@ def register_all(spark: SparkSession) -> None:
     """Register the full SQL function surface on a session (idempotent)."""
     spark.udf.register("ldos_extract_page", extract_page_udf)
     spark.udf.register("ldos_extract_text", _extract_text_udf)
-    spark.udf.register("ldos_extract_fields", extract_fields_udf)
+    spark.udf.register("ldos_extract_fields", _extract_fields_udf)
     spark.udf.register("ldos_clean_text", _clean_text_udf)
     spark.udf.register("ldos_norm_match", _norm_match_udf)
     spark.udf.register("ldos_nfc", _nfc_udf)

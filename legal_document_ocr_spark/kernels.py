@@ -4,7 +4,7 @@ These functions are the rebuild's analogue of the reference's per-page service
 kernels (SURVEY.md §2.3, K1-K16). They are plain Python/pandas-callable, with
 NO Spark imports, so that:
 
-1. the Spark pipeline wraps them in vectorized Arrow/pandas UDF stages
+1. the Spark pipeline wraps them in one vectorized Arrow UDF stage
    (``stages.py``) — batch-at-a-time, never per-row Python UDFs; and
 2. the pytest oracle calls them directly on fixture rows, guaranteeing the
    north-rule invariant "byte-identical extracted text per url" by
@@ -91,7 +91,7 @@ def decode_html(raw: bytes | None) -> str:
     if m:
         try:
             return raw.decode(m.group(1).decode("ascii").lower())
-        except (UnicodeDecodeError, LookupError):
+        except (UnicodeError, LookupError):  # incl. the "undefined" codec
             pass
     return raw.decode("utf-8", errors="replace")
 

@@ -130,12 +130,9 @@ def merge_documents(
     Plan-minimality audit (VERDICT r2 ask #9, measured round 3 at sf0.1):
     the merge contributes exactly ONE exchange (the bucket groupBy — pages
     of a doc cannot co-locate without it) and ONE FlatMapGroupsInPandas
-    (the fold is a single Python crossing). The other two ArrowEvalPython
-    stages in a merged plan belong to the upstream extraction (decode +
-    field battery), which is consumed standalone elsewhere — fusing the
-    field battery into the merge fold would remove one Arrow crossing but
-    duplicate the battery into a second code path while the regex compute
-    (the actual cost) stays identical. The plan is already minimal.
+    (the fold is a single Python crossing). The one ArrowEvalPython stage
+    in a merged plan is the upstream extraction, which runs the page kernel
+    and the field battery together once per distinct page.
     """
     df = extracted
     if group_col is None:

@@ -94,8 +94,9 @@ FROM documents
 
 
 def q_extract_fields_vn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The K9-K13 field battery (Python-re pandas UDF) on the VN corpus —
-    every field value is a closed-form function of (doc_id, text)."""
+    """The K9-K13 field battery (Python ``re``, inside the page Arrow UDF) on
+    the VN corpus — every field value is a closed-form function of
+    (doc_id, text)."""
     pages = synthesize_vn_pages_df(spark, sf_dir, pages_per_doc=1)
     out = run_extraction(pages, dedup=False, with_fields=True)
     return out.select("url", "fields.*")

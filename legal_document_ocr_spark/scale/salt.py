@@ -5,7 +5,7 @@ whole request (app/services/ocr_service.py:107-148 loops pages serially). At
 web scale the skew axes are (a) hot domains — one host contributing millions
 of near-identical pages — and (b) payload size — a few multi-MB pages pinning
 a partition. AQE's skew-join splitting only fixes JOIN skew; compute skew in
-the pandas-UDF stages must be pre-salted (SURVEY.md §4 "custom work" 2).
+the Python UDF stage must be pre-salted (SURVEY.md §4 "custom work" 2).
 
 All keys are JVM-side expressions (regexp host extraction, width_bucket on
 byte length, xxhash64 salt) — no Python in the exchange.

@@ -1,25 +1,25 @@
-"""Vectorized Arrow/pandas UDF stages + end-to-end pipeline assembly.
+"""Vectorized Arrow UDF stage + end-to-end pipeline assembly.
 
 The rebuild of the reference's per-page pipeline (app/services/ocr_service.py:
 107-148) as Spark stages (SURVEY.md §3.1 "Spark trace"):
 
     scan -> native filters (P1) -> [salted repartition, salt=True only] ->
     dedup-by-hash -> [UDF stage: decode/normalize K1 + layout-detect
-    K2/K5-K7 + text-extract K4/A2] -> [UDF stage: field battery K9-K13] ->
-    lineage -> sink
+    K2/K5-K7 + text-extract K4/A2 + field battery K9-K13] -> lineage -> sink
 
 Design decisions:
-- both heavy stages are scalar ITERATOR pandas UDFs (Iterator[Series] ->
-  Iterator[DataFrame]): Arrow-batched transfer, per-worker init amortized
-  across batches — the analogue of the reference's process-pool init
-  amortization (ocr_process_service.py:13-29), without the pool;
+- the heavy work is ONE scalar ITERATOR Arrow UDF (Iterator[pa.Array] ->
+  Iterator[pa.Array]) on the dedup'd side: one Python crossing per distinct
+  page, Arrow-batched transfer, no pandas; both kernels run in the same
+  pass, so the field battery also runs once per distinct payload rather
+  than on every copy after the join-back;
 - the field battery is pinned to Python ``re`` inside the UDF rather than
   Catalyst ``regexp_extract`` because byte-identical parity with the
   reference requires Python-regex semantics for Vietnamese case folding
   (SURVEY.md §7 risk 1); a Catalyst-native variant of the SQL-safe subset
   lives in operators/textops.py and is oracle-checked;
-- cheap predicates stay native and BEFORE the UDF stages — Catalyst will not
-  push filters through a pandas UDF (SURVEY.md §4), so plan order is the
+- cheap predicates stay native and BEFORE the UDF stage — Catalyst will not
+  push filters through a Python UDF (SURVEY.md §4), so plan order is the
   pushdown;
 - the html binary column is dropped immediately after extraction: column
   pruning of the dominant byte-weight column is the single biggest I/O win.
@@ -29,10 +29,11 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -78,24 +79,33 @@ PAGE_RESULT_TYPE = StructType(
 FIELDS_TYPE = StructType([StructField(f, StringType()) for f in FIELD_NAMES])
 
 
-@pandas_udf(PAGE_RESULT_TYPE)
-def extract_page_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """Stage 1+2+3: decode -> segment -> density filter -> reading-order join."""
-    for series in batches:
-        yield pd.DataFrame(
-            [extract_page(raw) for raw in series],
-            columns=list(PAGE_RESULT_TYPE.fieldNames()),
-        )
+def _page_udf(with_fields: bool):
+    """The page kernel, plus the field battery as a ``fields`` member when
+    ``with_fields``, as one Arrow UDF. Both variants are named
+    ``extract_page_udf`` in the plan: ``perfbench/ledger.py`` finds the
+    UDF node by that name."""
+    rtype = (
+        StructType([*PAGE_RESULT_TYPE.fields, StructField("fields", FIELDS_TYPE)])
+        if with_fields
+        else PAGE_RESULT_TYPE
+    )
+    arrow_type = to_arrow_type(rtype)
+
+    def extract_page_udf(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        """decode -> segment -> density filter -> reading-order join
+        [-> field battery K9-K13]."""
+        for arr in batches:
+            pages = [extract_page(raw) for raw in arr.to_pylist()]
+            if with_fields:
+                for page in pages:
+                    page["fields"] = extract_fields(page["extracted_text"])
+            yield pa.array(pages, type=arrow_type)
+
+    return arrow_udf(extract_page_udf, rtype)
 
 
-@pandas_udf(FIELDS_TYPE)
-def extract_fields_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """Stage 4: field post-processing battery (K9-K13), Python-re pinned."""
-    for series in batches:
-        yield pd.DataFrame(
-            [extract_fields(t) for t in series],
-            columns=list(FIELD_NAMES),
-        )
+extract_page_udf = _page_udf(with_fields=False)
+_extract_page_fields_udf = _page_udf(with_fields=True)
 
 
 def valid_pages(pages: DataFrame) -> DataFrame:
@@ -163,8 +173,10 @@ def run_extraction(
     if salt:
         df = salted_repartition(df, salt_partitions)
 
+    page_udf = _extract_page_fields_udf if with_fields else extract_page_udf
+
     def compute(distinct: DataFrame) -> DataFrame:
-        return distinct.withColumn("_page", extract_page_udf(F.col("html")))
+        return distinct.withColumn("_page", page_udf(F.col("html")))
 
     if dedup == "auto":
         dedup = estimate_distinct_ratio(df) <= DEDUP_AUTO_THRESHOLD
@@ -177,10 +189,6 @@ def run_extraction(
         extracted = compute(df if salt else ensure_parallelism(df))
     # drop the byte-dominant binary column as early as possible
     extracted = extracted.drop("html").select("*", "_page.*").drop("_page")
-    if with_fields:
-        extracted = extracted.withColumn(
-            "fields", extract_fields_udf(F.col("extracted_text"))
-        )
     return extracted.withColumn(
         "lineage",
         F.struct(

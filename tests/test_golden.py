@@ -3,7 +3,7 @@ text per url, golden-file verified).
 
 ``tests/golden/fixture_extracted.jsonl`` is the pipeline's full output
 (extracted_text + all ten fields) over the deterministic fixture corpus,
-committed to the repo. Any change to the kernels, the UDF stages, the dedup
+committed to the repo. Any change to the kernels, the UDF stage, the dedup
 path or the fixture generator that alters a single byte of any document's
 extraction fails here — regression protection across rounds, not just
 self-consistency within one run.

@@ -60,6 +60,9 @@ class TestDecode:
     def test_invalid_bytes_lossy(self):
         out = decode_html(b"\xff\xfe broken")
         assert "broken" in out
+        # a declared codec that raises plain UnicodeError on decode
+        out = decode_html(b"<meta charset=undefined>\xff\xfe broken")
+        assert out == "<meta charset=undefined>\ufffd\ufffd broken"
 
     def test_none(self):
         assert decode_html(None) == ""

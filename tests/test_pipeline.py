@@ -117,22 +117,36 @@ class TestValidation:
         assert df.filter(F.col("url").contains("big.example.com")).count() == 0
 
 
+class TestPlanShape:
+    """Page kernel and field battery cross into Python once, together."""
+
+    @pytest.mark.parametrize("dedup", [True, False])
+    def test_one_python_crossing(self, spark, dedup):
+        out = run_extraction(fixture_pages_df(spark), dedup=dedup)
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()  # the final plan, without the initial one
+        assert plan.toString().count("ArrowEvalPython") == 1
+
+
 class TestDedupEquivalence:
     """F8 — dedup-before-compute must not change results (J2 rewrite)."""
 
     def test_dedup_matches_direct(self, spark):
         pages = fixture_pages_df(spark)
-        with_dedup = (
-            run_extraction(pages, dedup=True, with_fields=False)
-            .select("url", "extracted_text")
-            .collect()
-        )
-        without = (
-            run_extraction(pages, dedup=False, with_fields=False)
-            .select("url", "extracted_text")
-            .collect()
-        )
-        assert sorted(map(tuple, with_dedup)) == sorted(map(tuple, without))
+        for with_fields in (False, True):
+            cols = ["url", "extracted_text"] + (["fields"] if with_fields else [])
+            with_dedup, without = (
+                sorted(
+                    run_extraction(pages, dedup=dedup, with_fields=with_fields)
+                    .select(*cols)
+                    .collect(),
+                    key=repr,
+                )
+                for dedup in (True, False)
+            )
+            assert with_dedup == without, with_fields
 
     def test_duplicate_urls_same_text(self, spark_result):
         dup_texts = {

@@ -1,6 +1,6 @@
 """Property-based kernel tests (hypothesis) — SURVEY.md §5.4 robustness.
 
-The kernels are the trusted core shared by the Spark UDF stages and the
+The kernels are the trusted core shared by the Spark UDF stage and the
 oracle; they must be total (never raise) over arbitrary byte/text inputs and
 hold their structural invariants on every input, not just fixtures.
 """
