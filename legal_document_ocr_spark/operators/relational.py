@@ -1,7 +1,7 @@
 """Relational operator surface — the reference's query API + the §2 battery.
 
-Mirrors app/services/document_service.py:83-229 (listing / filter /
-pagination / point lookup / projection-to-response) and exercises the full
+Mirrors app/services/document_service.py:83-153 (listing / filter /
+pagination / point lookup) and exercises the full
 SURVEY.md §2 inventory that is SQL-expressible: aggregations (A1-A11), windows
 (W1-W4), sorts/limits/top-k (O1-O4), joins (J1), set-ish ops (U1-U2),
 sessionization (A7 gaps-and-islands).
@@ -54,21 +54,6 @@ def get_document(docs: DataFrame, doc_id: int) -> DataFrame:
     """P6 point lookup (document_service.py:143-153) — partition-prunable
     equality predicate, pushed to the scan."""
     return docs.where(F.col("doc_id") == doc_id).limit(1)
-
-
-def document_response(docs: DataFrame) -> DataFrame:
-    """P7 projection to the nested response shape (document_service.py:208-229)."""
-    return docs.select(
-        F.struct(
-            F.col("doc_id").cast("string").alias("document_id"),
-            F.col("source").alias("source"),
-        ).alias("metadata"),
-        F.struct(
-            F.col("text").alias("content"),
-            F.col("lang").alias("lang"),
-            F.col("n_chars").alias("n_chars"),
-        ).alias("document_info"),
-    )
 
 
 def delete_documents(docs: DataFrame, doc_ids: DataFrame) -> DataFrame:

@@ -1053,38 +1053,6 @@ def top_terms(docs: DataFrame, k: int = 20, text_col: str = "text") -> DataFrame
     )
 
 
-# ---------------------------------------------------------------------------
-# SQL-safe field-extraction battery (K9 as coalesce of regexp_extract)
-# ---------------------------------------------------------------------------
-
-# Dialect-portable pattern subset of config.EXTRACTION_PATTERNS: first-match-
-# wins via coalesce(nullif(regexp_extract(...),'')...). The byte-identical
-# Python-re battery lives in kernels.extract_fields (pinned in the UDF stage);
-# this variant is the Catalyst-native fast path for SQL surfaces.
-SQL_FIELD_PATTERNS: dict[str, list[tuple[str, int]]] = {
-    "document_number": [(r"S[ốô]\s*:\s*([\w-]+)", 1), (r"S[ốô]\s+([\w-]+)", 1)],
-    "recipients": [(r"K[íi]nh\s+g[ửư]i\s*:\s*([^\r\n]+)", 1)],
-    "subject": [(r"V/v\s+([^\r\n]+)", 1)],
-    "signer": [(r"\n([A-Z][A-Z ]+)$", 1)],
-}
-
-
-def _first_match(col: Column, patterns: list[tuple[str, int]]) -> Column:
-    alts = [
-        F.nullif(F.regexp_extract(col, pat, grp), F.lit("")) for pat, grp in patterns
-    ]
-    return alts[0] if len(alts) == 1 else F.coalesce(*alts)
-
-
-def sql_extract_fields(df: DataFrame, text_col: str = "extracted_text") -> DataFrame:
-    """Attach first-match-wins field columns using native regexp_extract."""
-    c = F.col(text_col)
-    out = df
-    for field, patterns in SQL_FIELD_PATTERNS.items():
-        out = out.withColumn(field, _first_match(c, patterns))
-    return out
-
-
 def extraction_eval(
     df: DataFrame,
     pred_col: str = "extracted_text",

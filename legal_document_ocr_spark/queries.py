@@ -21,2146 +21,37 @@ Oracle-parity rules used throughout (see operator docstrings for detail):
 - computed ints are cast to bigint on both sides (DuckDB len()/count() are
   BIGINT; Spark size()/row_number() are int).
 
-Non-SQL-expressible entries (the merge fold is; it's oracle'd by
-construction) register ``None`` oracles and get the driver's rows-only check.
+Both dicts are built from the family modules under ``registry/`` by one
+naming rule, so no query is named here: a query ``<name>`` is a function
+``q_<name>`` defined in a ``registry/*.py`` module, and its oracle is that
+module's ``_SQL_<NAME>`` string or the result of calling its
+``_sql_<name>()``. A query with neither gets the driver's rows-only check.
 """
 
 from __future__ import annotations
 
-
+import importlib
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .merge import merge_documents
-from .operators import dedup, multimodal, relational, similarity, textops
-from .operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from .sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from .stages import run_extraction
+from . import registry
 
-from .registry.extraction import (
-    q_ansi_safety,
-    _SQL_ANSI_SAFETY,
-    q_observed_metrics,
-    _SQL_OBSERVED_METRICS,
-    _SQL_COMPACTION_READBACK,
-    q_compaction_readback,
-    _SQL_DEDUP_STATS,
-    _SQL_EVENTS_JSON,
-    _SQL_EXPLODE_SPANS,
-    _SQL_EXTRACT_FIELDS_VN,
-    _SQL_EXTRACT_MAIN,
-    _SQL_EXTRACT_STATS,
-    _SQL_EXTRACT_TABLES,
-    _SQL_LEGAL_CITATIONS,
-    _SQL_MERGE_SPLIT_VN,
-    _SQL_MERGE_VN,
-    _SQL_PARTITIONED_SINK,
-    _SQL_SPAN_SCORES,
-    q_dedup_stats,
-    q_events_json,
-    q_explode_spans,
-    q_extract_fields_vn,
-    q_extract_main_text,
-    q_extract_sql_surface,
-    q_extract_stats,
-    q_extract_tables,
-    q_legal_citations,
-    q_merge_documents_vn,
-    q_merge_split_vn,
-    q_partitioned_sink_readback,
-    q_span_scores,
-)
-from .registry.filters_sketches import (
-    _SQL_CONSISTENT_HASH_MOVES,
-    q_consistent_hash_moves,
-    q_bitmap_distinct,
-    _SQL_BITMAP_DISTINCT,
-    q_listagg_sources,
-    _SQL_LISTAGG_SOURCES,
-    q_hll_native_distinct,
-    _SQL_HLL_NATIVE_DISTINCT,
-)
-from .registry.quality_eval import (
-    _SQL_L_DIVERSITY,
-    _SQL_QUANTILE_SKETCH_MERGE,
-    q_quantile_sketch_merge,
-    _SQL_CONCENTRATION_INDICES,
-    q_concentration_indices,
-    _SQL_PSI_DRIFT,
-    q_psi_drift,
-    _SQL_BRIER_SCORE,
-    q_brier_score,
-    _SQL_RANGE_PARTITION_AUDIT,
-    q_range_partition_audit,
-    q_l_diversity,
-    _SQL_T_CLOSENESS,
-    q_t_closeness,
-    _SQL_MANN_WHITNEY,
-    q_mann_whitney,
-    _SQL_FLEISS_KAPPA,
-    q_fleiss_kappa,
-    _SQL_SHANNON_DIVERSITY,
-    q_shannon_diversity,
-    _SQL_PEAK_CONCURRENCY,
-    q_peak_concurrency,
-)
-from .registry.tpch_media import (
-    q_image_histogram,
-    _SQL_IMAGE_HISTOGRAM,
-    _SQL_COPURCHASE_PAIRS,
-    q_copurchase_pairs,
-)
-from .registry.textana import (
-    q_unigram_segments,
-    q_unigram_fertility,
-    _sql_unigram_segments,
-    _sql_unigram_fertility,
-    q_sentence_dedup,
-    _SQL_SENTENCE_DEDUP,
-    q_sentence_chunks,
-    _SQL_SENTENCE_CHUNKS,
-    q_rag_corpus_pipeline,
-    _SQL_RAG_CORPUS_PIPELINE,
-    _SQL_COVERAGE_CURVE,
-    _SQL_SPLIT_SENTENCES,
-    _sql_wordpiece_fertility,
-    _sql_wordpiece_segments,
-    _sql_wordpiece_usage,
-    q_split_sentences,
-    q_wordpiece_fertility,
-    q_wordpiece_segments,
-    q_wordpiece_usage,
-    _SQL_INDEX_PRUNING,
-    _SQL_ROCCHIO_EXPANSION,
-    _sql_greedy_cover,
-    _SQL_DEHYPHENATE,
-    q_coverage_curve,
-    q_dehyphenate,
-    q_greedy_cover,
-    q_index_pruning,
-    q_rocchio_expansion,
-)
-from .registry.multimodal_stream import (
-    _SQL_STREAM_CMS_REGISTERS,
-    _SQL_STREAM_MEDIA_DECODE,
-    q_stream_cms_registers,
-    q_stream_quantile_sketch,
-    _SQL_STREAM_QUANTILE_SKETCH,
-    q_stream_media_decode,
-    q_stream_session_window,
-)
-from .registry.mining import (
-    q_measurements_extract,
-    _SQL_MEASUREMENTS_EXTRACT,
-    q_quote_mining,
-    _SQL_QUOTE_MINING,
-    q_harmonic_centrality,
-    _sql_harmonic_centrality,
-    q_bowtie_membership,
-    _sql_bowtie_membership,
-    q_markov_entropy_rate,
-    _sql_markov_entropy_rate,
-    _SQL_RANDOM_WALKS,
-    q_random_walks,
-)
-from .registry.relational_web import (
-    q_cdx_zipnum,
-    _sql_cdx_zipnum,
-    q_seasonal_anomaly,
-    _SQL_SEASONAL_ANOMALY,
-    q_sliding_event_counts,
-    _SQL_SLIDING_EVENT_COUNTS,
-    q_dow_seasonality,
-    _SQL_DOW_SEASONALITY,
-    q_pagerank_convergence,
-    _sql_pagerank_convergence,
-    q_pagination_extract,
-    _SQL_PAGINATION_EXTRACT,
-    q_breadcrumb_census,
-    _SQL_BREADCRUMB_CENSUS,
-    q_page_series_gaps,
-    _SQL_PAGE_SERIES_GAPS,
-    q_canonical_pick,
-    _SQL_CANONICAL_PICK,
-    q_stitch_series,
-    _SQL_STITCH_SERIES,
-    q_http_cache_plan,
-    _SQL_HTTP_CACHE_PLAN,
-    q_title_dup_census,
-    _SQL_TITLE_DUP_CENSUS,
-    q_link_locality,
-    _sql_link_locality,
-    q_image_dup_clusters,
-    _SQL_IMAGE_DUP_CLUSTERS,
-    _SQL_URL_SURVIVAL,
-    q_url_survival,
-    _SQL_IMAGE_ALT_PAIRS,
-    q_image_alt_pairs,
-    _SQL_ASOF_EVENTS,
-    _SQL_CORPUS_ROLLUP,
-    _SQL_CRAWL_DIFF,
-    _SQL_CRAWL_SCHEDULE,
-    _SQL_DELETE_DOCS,
-    _SQL_DOM_STATS,
-    _SQL_EXTRACTION_EVAL,
-    _SQL_FRONTIER_POLITE,
-    _SQL_HTML_METADATA,
-    _SQL_JSONLD_EXTRACT,
-    _SQL_IMAGE_AHASH,
-    _SQL_IMAGE_NEAR_PAIRS,
-    _SQL_IP_RANGES,
-    _SQL_CAPTURE_INTERVALS,
-    _SQL_OUTLINE_NUMBERING,
-    _SQL_PUBLISH_DATES,
-    _SQL_KMV_DISTINCT,
-    _SQL_LIST_DOCS,
-    _SQL_ORDER_RANKS,
-    _SQL_PDF_EXTRACT,
-    _SQL_POINT_LOOKUP,
-    _SQL_PRICING,
-    _SQL_REVENUE_NATION,
-    _SQL_ROBOTS_PRECEDENCE,
-    _SQL_ROBOTS_RULES,
-    _SQL_SESSIONIZE,
-    _SQL_SITEMAP_URLS,
-    _SQL_STRATIFIED_SAMPLE,
-    _SQL_TOP_BRANDS,
-    _SQL_UPDATE_DOCS,
-    _SQL_WINDOWED_COUNTS,
-    _SQL_WORD_OVERLAP,
-    _sql_anchor_index,
-    _sql_anchor_texts,
-    _sql_cdx_index,
-    _sql_cdx_revisits,
-    _sql_crawl_frontier,
-    _sql_domain_profile,
-    _sql_extract_links,
-    _sql_host_communities,
-    _SQL_K_CORE,
-    _sql_host_pagerank,
-    _sql_trust_rank,
-    _sql_warc_binary_parse,
-    _sql_zorder_docs,
-    _sql_warc_parse,
-    q_adjacent_word_overlap,
-    q_anchor_index,
-    q_anchor_texts,
-    q_asof_events,
-    q_cdx_index,
-    q_cdx_revisits,
-    q_corpus_rollup,
-    q_crawl_diff,
-    q_crawl_frontier,
-    q_crawl_schedule,
-    q_delete_documents,
-    q_dom_stats,
-    q_domain_profile,
-    q_extract_links,
-    q_extraction_eval,
-    q_frontier_polite,
-    q_host_communities,
-    q_k_core,
-    q_host_pagerank,
-    q_ip_ranges,
-    q_capture_intervals,
-    q_outline_numbering,
-    q_publish_dates,
-    q_html_metadata,
-    q_jsonld_extract,
-    q_hreflang_reciprocity,
-    _SQL_HREFLANG_RECIPROCITY,
-    q_feed_entries,
-    _SQL_FEED_ENTRIES,
-    q_image_ahash,
-    q_image_near_pairs,
-    q_kmv_distinct,
-    q_list_documents_page,
-    q_order_ranks,
-    q_pdf_extract,
-    q_point_lookup,
-    q_pricing_summary,
-    q_revenue_by_nation,
-    q_robots_precedence,
-    q_robots_rules,
-    q_sessionize_events,
-    q_sitemap_urls,
-    q_stratified_sample,
-    q_top_brands,
-    q_trust_rank,
-    q_update_documents,
-    q_warc_binary_parse,
-    q_warc_parse,
-    q_zorder_docs,
-    q_windowed_event_counts,
-    q_cdc_apply,
-    _SQL_CDC_APPLY,
-)
-from .registry.textana import (
-    q_chao1_richness,
-    _SQL_CHAO1_RICHNESS,
-    q_burrows_delta,
-    _SQL_BURROWS_DELTA,
-    q_symspell_variants,
-    _SQL_SYMSPELL_VARIANTS,
-    q_hapax_share,
-    _SQL_HAPAX_SHARE,
-    q_mlm_mask_plan,
-    _SQL_MLM_MASK_PLAN,
-    q_good_turing,
-    _SQL_GOOD_TURING,
-    _SQL_KEYNESS_TERMS,
-    q_keyness_terms,
-    _SQL_VOCAB_CHURN,
-    q_vocab_churn,
-    _sql_lm_greedy_decode,
-    q_lm_greedy_decode,
-    _sql_novelty_curve,
-    q_novelty_curve,
-    _sql_heaps_law,
-    q_heaps_law,
-    _sql_feature_hashing,
-    q_feature_hashing,
-    _sql_langid_spans,
-    q_langid_spans,
-    _SQL_WORD_DROPOUT,
-    q_word_dropout,
-    _SQL_CODE_DETECT,
-    q_code_detect,
-    _SQL_DELETED_INTERPOLATION,
-    q_deleted_interpolation,
-    _SQL_SPAN_CORRUPTION,
-    q_span_corruption,
-    _sql_dedup_diversity,
-    q_dedup_diversity,
-    _SQL_HELDOUT_PERPLEXITY,
-    q_heldout_perplexity,
-    _SQL_BEST_SNIPPET,
-    q_best_snippet,
-    _SQL_SHARED_PREFIXES,
-    q_shared_prefixes,
-    _sql_term_burstiness,
-    q_term_burstiness,
-    _SQL_KNESER_NEY_BIGRAMS,
-    q_kneser_ney_bigrams,
-    _SQL_CONDITIONAL_ENTROPY,
-    q_conditional_entropy,
-    _SQL_VOCAB_COVERAGE,
-    q_vocab_coverage,
-    _SQL_NEGATIVE_SAMPLING_TABLE,
-    q_negative_sampling_table,
-    _SQL_BITEXT_CANDIDATES,
-    q_bitext_candidates,
-    _SQL_CANONICAL_URLS,
-    _SQL_CORPUS_STATS,
-    _SQL_CURATION_FUNNEL,
-    _SQL_FINGERPRINTS,
-    _SQL_MIXTURE_WEIGHTS,
-    _SQL_NFC_FP,
-    _SQL_READABILITY,
-    _SQL_QUALITY,
-    _SQL_REDACT_PII,
-    _SQL_PII_LUHN,
-    _SQL_TFIDF_TERMS,
-    _SQL_TOKEN_COUNTS,
-    _SQL_TOP_TERMS,
-    _sql_lang_id,
-    _sql_langid_confusion,
-    q_langid_confusion,
-    q_canonical_urls,
-    q_corpus_length_stats,
-    q_curation_funnel,
-    q_fingerprints,
-    q_lang_id,
-    q_mixture_weights,
-    q_nfc_fingerprints,
-    q_quality_scores,
-    q_readability,
-    q_redact_pii,
-    q_pii_luhn,
-    q_tfidf_terms,
-    q_token_counts,
-    q_top_terms,
-)
-from .registry.mining import (
-    q_xml_sink_readback,
-    _SQL_XML_SINK_READBACK,
-    q_xml_field_extract,
-    _SQL_XML_FIELD_EXTRACT,
-    q_variant_shred,
-    _SQL_VARIANT_SHRED,
-    q_variant_explode_tags,
-    _SQL_VARIANT_EXPLODE_TAGS,
-    q_session_window_agg,
-    _SQL_SESSION_WINDOW_AGG,
-    q_bloom_sink_readback,
-    _SQL_BLOOM_SINK_READBACK,
-    q_udtf_shingles,
-    _SQL_UDTF_SHINGLES,
-    q_interarrival_stats,
-    _SQL_INTERARRIVAL_STATS,
-    q_markov_stationary,
-    _SQL_MARKOV_STATIONARY,
-    q_cusum_changepoint,
-    _SQL_CUSUM_CHANGEPOINT,
-    _SQL_BUCKETED_JOIN_READBACK,
-    q_bucketed_join_readback,
-    _SQL_EVENT_ACF,
-    q_event_acf,
-    _SQL_COCITATION_PAIRS,
-    _SQL_EVENT_BURSTS,
-    _SQL_EVENT_TRANSITIONS,
-    _SQL_KMV_OVERLAP,
-    _SQL_EXIF_EXTRACT,
-    _SQL_CSV_PARSE_ISOLATION,
-    _SQL_CSV_SINK_READBACK,
-    _SQL_JSONL_SINK_READBACK,
-    _SQL_MICRODATA_EXTRACT,
-    _SQL_ORC_SINK_READBACK,
-    _SQL_NGRAM_NOVELTY,
-    _SQL_PARETO_FRONTIER,
-    _SQL_SCORE_CALIBRATION,
-    _SQL_SOURCE_DUP_MATRIX,
-    _sql_neardup_eval,
-    _SQL_DUP_FAMILY_HISTOGRAM,
-    _sql_quantile_drift,
-    _sql_seed_reachability,
-    _sql_shard_manifest,
-    _sql_wat_records,
-    _SQL_SESSION_PATHS,
-    _SQL_TRIANGLE_COUNT,
-    q_cocitation_pairs,
-    q_event_bursts,
-    q_event_transitions,
-    q_kmv_overlap,
-    q_compression_ratio,
-    q_csv_parse_isolation,
-    q_csv_sink_readback,
-    q_dup_family_histogram,
-    q_exif_extract,
-    q_jsonl_sink_readback,
-    q_microdata_extract,
-    q_neardup_eval,
-    q_orc_sink_readback,
-    q_quantile_drift,
-    q_seed_reachability,
-    q_shard_manifest,
-    q_ngram_novelty,
-    q_pareto_frontier,
-    q_score_calibration,
-    q_source_dup_matrix,
-    q_wat_records,
-    q_session_paths,
-    q_triangle_count,
-    _sql_hyperball,
-    q_hyperball,
-    _sql_bloom_dedup,
-    q_bloom_dedup,
-    _SQL_WARC_SEGMENTS,
-    q_warc_segments,
-    _SQL_SCHEMA_EVOLUTION,
-    q_schema_evolution,
-    _sql_neighborhood_function,
-    q_neighborhood_function,
-)
-from .registry.dedup_olap import (
-    q_source_similarity,
-    _SQL_SOURCE_SIMILARITY,
-    q_dedup_key_agreement,
-    _sql_dedup_key_agreement,
-    q_prefix_filter_pairs,
-    _SQL_PREFIX_FILTER_PAIRS,
-    q_pair_threshold_curve,
-    _SQL_PAIR_THRESHOLD_CURVE,
-    q_theil_index,
-    _SQL_THEIL_INDEX,
-    q_dedup_purity,
-    _SQL_DEDUP_PURITY,
-    _sql_minhash_merge,
-    q_minhash_merge,
-    q_stream_minhash,
-    _SQL_CHI_SQUARE,
-    _SQL_COHORT_RETENTION,
-    _SQL_DEDUP_CLUSTERS,
-    _SQL_DEDUP_EXACT,
-    _SQL_DUP_SUBSTRING_RUNS,
-    _SQL_EDIT_DISTANCES,
-    _SQL_HOST_DEGREES,
-    _SQL_HOST_GINI,
-    _SQL_IDLE_RICH_CUSTOMERS,
-    _SQL_IVF_INERTIA,
-    _SQL_JSON_ARRAY_STATS,
-    _SQL_JSON_KEY_CENSUS,
-    _SQL_LATEST_CAPTURE,
-    _SQL_LENGTH_QUARTILES_NTILE,
-    _SQL_MINHASH_BANDS,
-    _SQL_MINHASH_PAIRS,
-    _SQL_NEARDUP_VERIFIED,
-    _SQL_NGRAM_JACCARD,
-    _SQL_ORDER_DATE_SPINE,
-    _SQL_PARAM_CENSUS,
-    _SQL_PRICING_CHARGE,
-    _SQL_RECORD_LINKAGE,
-    _SQL_ROLLING_VALUES,
-    _SQL_ROLLUP_CENSUS,
-    _SQL_CUBE_CENSUS,
-    _SQL_CONTAINMENT_PAIRS,
-    _sql_column_profile,
-    _SQL_PREFIX_JACCARD,
-    _SQL_SIMHASH,
-    _SQL_SIMHASH_PAIRS,
-    _SQL_SITEMAP_COVERAGE,
-    _SQL_SIZED_PART_REVENUE,
-    _SQL_SNAPSHOT_MEMBERSHIP,
-    _SQL_STREAM_QUALITY,
-    _SQL_STREAM_ENRICH,
-    _SQL_TFIDF_PAIRS,
-    _SQL_VALUE_CORRELATION,
-    _SQL_VALUE_HISTOGRAM,
-    _sql_lang_pivot,
-    _sql_lang_unpivot,
-    q_chi_square,
-    q_cohort_retention,
-    q_dedup_clusters,
-    q_dedup_exact,
-    q_dup_substring_runs,
-    q_edit_distances,
-    q_host_degrees,
-    q_host_gini,
-    q_idle_rich_customers,
-    q_ivf_inertia,
-    q_json_array_stats,
-    q_json_key_census,
-    q_lang_pivot,
-    q_lang_unpivot,
-    q_latest_capture,
-    q_length_quartiles,
-    q_minhash_bands,
-    q_minhash_pairs,
-    q_neardup_verified,
-    q_ngram_jaccard,
-    q_order_date_spine,
-    q_param_census,
-    q_pricing_charge,
-    q_robots_blockrate,
-    q_record_linkage,
-    q_rolling_values,
-    q_rollup_census,
-    q_cube_census,
-    q_containment_pairs,
-    q_column_profile,
-    q_prefix_jaccard,
-    q_simhash,
-    q_simhash_pairs,
-    q_sitemap_coverage,
-    q_sized_part_revenue,
-    q_snapshot_membership,
-    q_stream_quality,
-    q_stream_enrich,
-    _SQL_CONTRASTIVE_TRIPLETS,
-    q_contrastive_triplets,
-    _SQL_DEDUP_BCUBED,
-    q_dedup_bcubed,
-    _SQL_DEDUP_ARI,
-    q_dedup_ari,
-    _SQL_SOFT_DEDUP_WEIGHTS,
-    q_soft_dedup_weights,
-    _SQL_STREAM_ATTRIBUTION,
-    q_stream_attribution,
-    q_tfidf_pairs,
-    q_value_correlation,
-    q_value_histogram,
-)
-from .registry.tpch_media import (
-    _SQL_AUDIO_DECODE,
-    _SQL_BRAND_SUPPLIERS,
-    _SQL_CHUNK_DOCS,
-    _SQL_CLUSTER_REPS,
-    _SQL_EVENT_FUNNEL,
-    _SQL_EXTRACT_HEADINGS,
-    _SQL_GIF_DECODE,
-    _SQL_HTML_TABLES,
-    _SQL_IMAGE_DECODE,
-    _SQL_IMAGE_RESIZE,
-    _SQL_INCREMENTAL_DEDUP,
-    _SQL_JPEG_DECODE,
-    _SQL_LARGE_ORDERS,
-    _SQL_LATE_PRIORITY,
-    _SQL_LINE_DEDUP,
-    _SQL_LINK_RELATIONS,
-    _SQL_META_ROBOTS,
-    _SQL_ORDER_DISTRIBUTION,
-    _SQL_PACK_SEQUENCES,
-    _SQL_PACK_SEQUENCE_ROWS,
-    _SQL_REGIONAL_REVENUE,
-    _SQL_SHIPPING_PRIORITY,
-    _SQL_SMALL_QTY_REVENUE,
-    _SQL_TIFF_DECODE,
-    _SQL_TIFF_LZW_DECODE,
-    _SQL_PHASH_GROUPS,
-    _SQL_PNG_VARIANTS_DECODE,
-    _SQL_ICO_DECODE,
-    _SQL_IMAGE_COLORS,
-    _SQL_G711_DECODE,
-    _SQL_MEDIA_PIPELINE,
-    _SQL_WEBP_DECODE,
-    _SQL_JPEG_PROGRESSIVE,
-    _SQL_AUDIO_FEATURES,
-    _SQL_AUDIO_SEGMENTS,
-    _SQL_VIDEO_FRAMES,
-    _SQL_REVENUE_FORECAST,
-    _SQL_VOLUME_SHIPPING,
-    _SQL_MARKET_SHARE,
-    _SQL_RETURNED_ITEMS,
-    _SQL_PROMO_REVENUE,
-    _SQL_WAITING_SUPPLIERS,
-    _SQL_PRODUCT_PROFIT,
-    _SQL_IMPORTANT_STOCK,
-    _SQL_PROMOTION_SUPPLIERS,
-    _SQL_MIN_COST_SUPPLIER,
-    _SQL_SHIPMODE_PRIORITY,
-    _SQL_BRACKET_REVENUE,
-    _SQL_IDLE_CUSTOMERS,
-    _SQL_TOP_SUPPLIER,
-    _SQL_URL_DEPTHS,
-    q_audio_decode,
-    q_brand_suppliers,
-    q_chunk_documents,
-    q_cluster_reps,
-    q_event_funnel,
-    q_extract_headings,
-    q_gif_decode,
-    q_html_tables,
-    q_image_decode,
-    q_image_resize,
-    q_incremental_dedup,
-    q_jpeg_decode,
-    q_large_orders,
-    q_late_priority,
-    q_line_dedup,
-    q_link_relations,
-    q_meta_robots,
-    q_order_distribution,
-    q_pack_sequence_rows,
-    q_pack_sequences,
-    q_regional_revenue,
-    q_shipping_priority,
-    q_small_qty_revenue,
-    q_tiff_decode,
-    q_tiff_lzw_decode,
-    q_phash_groups,
-    q_png_variants_decode,
-    q_ico_decode,
-    q_image_colors,
-    q_g711_decode,
-    q_media_pipeline,
-    q_webp_decode,
-    q_jpeg_progressive,
-    q_audio_features,
-    q_audio_segments,
-    q_video_frames,
-    q_revenue_forecast,
-    q_volume_shipping,
-    q_market_share,
-    q_returned_items,
-    q_promo_revenue,
-    q_waiting_suppliers,
-    q_product_profit,
-    q_important_stock,
-    q_promotion_suppliers,
-    q_min_cost_supplier,
-    q_shipmode_priority,
-    q_bracket_revenue,
-    q_idle_customers,
-    q_top_supplier,
-    q_url_depths,
-)
-from .registry.curation import (
-    q_embedding_sq8,
-    _SQL_EMBEDDING_SQ8,
-    q_sq8_recall,
-    _sql_sq8_recall,
-    q_skew_join_salted,
-    _SQL_SKEW_JOIN_SALTED,
-    q_salted_group_counts,
-    _SQL_SALTED_GROUP_COUNTS,
-    q_cms_error_audit,
-    _sql_cms_error_audit,
-    q_bloom_fpr_audit,
-    _SQL_BLOOM_FPR_AUDIT,
-    q_pps_sample,
-    _SQL_PPS_SAMPLE,
-    _sql_grid_dbscan,
-    q_grid_dbscan,
-    _SQL_MMR_SELECT,
-    q_mmr_select,
-    _sql_random_projection,
-    q_random_projection,
-    _sql_jl_distortion,
-    q_jl_distortion,
-    _SQL_GLOBAL_SHUFFLE,
-    q_global_shuffle,
-    _SQL_CURRICULUM_ORDER,
-    q_curriculum_order,
-    _SQL_CLUSTER_SAMPLE,
-    q_cluster_sample,
-    _sql_multiprobe_knn,
-    q_multiprobe_knn,
-    _sql_ndcg_eval,
-    q_ndcg_eval,
-    _SQL_FIXED_SIZE_SAMPLE,
-    q_fixed_size_sample,
-    _SQL_SPLIT_LEAKAGE,
-    q_split_leakage,
-    _SQL_CDC_CHUNKS,
-    q_cdc_chunks,
-    _SQL_SEMANTIC_DEDUP,
-    q_semantic_dedup,
-    _SQL_BLOOM_BLOCKLIST,
-    _SQL_BPE_PAIRS,
-    _SQL_CHAR_ENTROPY,
-    _SQL_CONTAMINATION,
-    _SQL_CURATION_FUNNEL_NEARDUP,
-    _SQL_HOLDOUT_SPLIT,
-    _SQL_INVERTED_INDEX,
-    _SQL_LM_SCORES,
-    _SQL_QUALITY_CLF,
-    _SQL_REPETITION,
-    _SQL_WINNOW,
-    _sql_cms_counts,
-    _SQL_HEAVY_HITTERS,
-    _sql_embedding_batch_knn,
-    _sql_embedding_ivf_knn,
-    _sql_embedding_knn,
-    _sql_embedding_knn_bucketed,
-    _sql_embedding_near_dups,
-    _sql_embedding_pq_knn,
-    _sql_error_pages,
-    _sql_ivf_refined_assign,
-    q_bloom_blocklist,
-    q_bpe_pair_counts,
-    q_char_entropy,
-    q_cms_counts,
-    q_heavy_hitters,
-    q_contamination,
-    q_curation_funnel_neardup,
-    q_embedding_batch_knn,
-    q_embedding_ivf_knn,
-    q_embedding_knn,
-    q_embedding_knn_bucketed,
-    q_embedding_near_dups,
-    q_embedding_pq_knn,
-    q_error_pages,
-    q_holdout_split,
-    q_inverted_index,
-    q_ivf_refined_assign,
-    q_lm_scores,
-    q_quality_classifier,
-    q_repetition_stats,
-    q_winnow_fingerprints,
-)
-from .registry.multimodal_stream import (
-    q_stream_hll_registers,
-    _SQL_STREAM_HLL_REGISTERS,
-    q_stream_sniff_census,
-    _SQL_STREAM_SNIFF_CENSUS,
-    q_content_type_mismatch,
-    _SQL_CONTENT_TYPE_MISMATCH,
-    _SQL_STREAM_DEDUP_WM,
-    q_stream_dedup_wm,
-    _SQL_HOST_PAGE_CAP,
-    _SQL_HOST_TEMPLATE_LINES,
-    _SQL_LENGTH_QUANTILES,
-    _SQL_MULTIMODAL,
-    _SQL_MULTIMODAL_FRAMES,
-    _SQL_RECRAWL_PRIORITY,
-    _SQL_STREAM_DEDUP,
-    _SQL_STREAM_INCR_DEDUP,
-    _sql_domain_rollup,
-    _sql_registrable_domains,
-    _sql_url_spam,
-    q_domain_rollup,
-    q_host_page_cap,
-    q_host_template_lines,
-    q_length_quantiles,
-    q_multimodal_features,
-    q_multimodal_frames,
-    q_recrawl_priority,
-    q_registrable_domains,
-    q_stream_dedup,
-    q_stream_incremental_dedup,
-    q_stream_sessionize,
-    q_stream_windowed_counts,
-    q_url_spam,
-)
-from .registry.quality_eval import (
-    q_emd_drift,
-    _SQL_EMD_DRIFT,
-    q_mcnemar_filters,
-    _SQL_MCNEMAR_FILTERS,
-    _SQL_FILTER_AGREEMENT,
-    _SQL_EPOCH_PLAN,
-    q_filter_agreement,
-    q_epoch_plan,
-    _SQL_ROLLUP_MERGE,
-    q_rollup_merge,
-    _SQL_ROBOTS_WILDCARDS,
-    q_robots_wildcards,
-    _sql_bootstrap_ci,
-    q_bootstrap_ci,
-    _SQL_LINREG_TRAIN,
-    q_linreg_train,
-    _SQL_LOGREG_TRAIN_GD,
-    q_logreg_train_gd,
-    _SQL_BYTE_FERTILITY,
-    q_byte_fertility,
-    _SQL_PERCENTILE_NORMALIZE,
-    q_percentile_normalize,
-    _SQL_NEYMAN_ALLOCATION,
-    q_neyman_allocation,
-    _SQL_CROSSVAL_OLS,
-    q_crossval_ols,
-    _SQL_THRESHOLD_SELECT,
-    q_threshold_select,
-    _SQL_KS_STATISTIC,
-    q_ks_statistic,
-    _SQL_AUC_EXACT,
-    q_auc_exact,
-    _SQL_QUALITY_RESIDUALS,
-    q_quality_residuals,
-    _SQL_LOG2_HISTOGRAM,
-    q_log2_histogram,
-    _SQL_KENDALL_TAU,
-    q_kendall_tau,
-    _SQL_SPEARMAN_RHO,
-    q_spearman_rho,
-    _sql_mrr_eval,
-    q_mrr_eval,
-    _SQL_AVG_PRECISION,
-    q_avg_precision,
-    _sql_rbo_overlap,
-    q_rbo_overlap,
-    _SQL_HILL_TAIL_INDEX,
-    q_hill_tail_index,
-    _SQL_SIMPSON_DIVERSITY,
-    q_simpson_diversity,
-    _SQL_WELCH_TTEST,
-    q_welch_ttest,
-    _SQL_CVM_STATISTIC,
-    q_cvm_statistic,
-    _SQL_RELIABILITY_BINS,
-    q_reliability_bins,
-    _SQL_WATERFILL_ALLOCATION,
-    q_waterfill_allocation,
-    _SQL_OTSU_THRESHOLD,
-    q_otsu_threshold,
-    _sql_benford_deviation,
-    q_benford_deviation,
-    _SQL_RUNS_TEST,
-    q_runs_test,
-    _sql_filter_ensemble,
-    q_filter_ensemble,
-    _SQL_CENTROID_DRIFT,
-    _SQL_DEGREE_ASSORTATIVITY,
-    _SQL_IVF_ADMISSION,
-    _SQL_K_ANONYMITY,
-    _SQL_ROBOTS_DRIFT,
-    _SQL_TEMPERATURE_MIXTURE,
-    _SQL_URL_TEMPLATES,
-    _SQL_WINSORIZED_STATS,
-    _sql_ann_recall_eval,
-    _sql_functional_dependencies,
-    _sql_rank_fusion,
-    q_ann_recall_eval,
-    q_centroid_drift,
-    q_degree_assortativity,
-    q_functional_dependencies,
-    q_ivf_admission,
-    q_k_anonymity,
-    q_rank_fusion,
-    q_robots_drift,
-    q_temperature_mixture,
-    q_url_templates,
-    q_winsorized_stats,
-)
-from .registry.filters_sketches import (
-    q_hll_rolling_distinct,
-    _SQL_HLL_ROLLING_DISTINCT,
-    q_query_likelihood,
-    _SQL_QUERY_LIKELIHOOD,
-    _SQL_BM25,
-    _SQL_C4,
-    _SQL_CACHE_POLICY,
-    _SQL_COLLAPSE_LINES,
-    _SQL_CURATION_PIPELINE,
-    _SQL_DSIR_WEIGHTS,
-    _SQL_WEIGHTED_SAMPLE,
-    _SQL_DOMAIN_QUALITY_CI,
-    _SQL_BUDGET_SELECT,
-    _SQL_GOPHER_REPETITION,
-    _SQL_GOPHER_RULES,
-    _SQL_HLL_BY_SOURCE,
-    _SQL_HLL_DISTINCT,
-    _SQL_HOST_LENGTH_OUTLIERS,
-    _SQL_LANG_CONSISTENCY,
-    _SQL_LINK_FARMS,
-    _SQL_MOJIBAKE,
-    _SQL_OOV_RATE,
-    _SQL_PERPLEXITY_FILTER,
-    _SQL_PMI,
-    _SQL_REDIRECT_CHAINS,
-    _SQL_ROBOTS_BLOCKRATE,
-    _SQL_ROBOTS_SITEMAPS,
-    _SQL_PAYWALL_DETECT,
-    _SQL_SHARD_ASSIGN,
-    _SQL_SOFT404,
-    _SQL_SOURCE_DIVERGENCE,
-    _SQL_TEXT_DENSITY_BLOCKS,
-    _SQL_TRUNCATED_CAPTURES,
-    _SQL_WARC_HTTP_PARSE,
-    _SQL_WET_RECORDS,
-    _SQL_X_ROBOTS_HEADERS,
-    _SQL_ZIPF_FIT,
-    _sql_bpe_fertility,
-    _sql_bpe_train,
-    _sql_host_hits,
-    _sql_host_mirrors,
-    _sql_html_entities,
-    _sql_html_markdown,
-    _sql_incremental_neardup,
-    _sql_script_mix,
-    q_bm25_scores,
-    q_bpe_fertility,
-    q_bpe_train,
-    q_c4_filters,
-    q_cache_policy,
-    q_collapse_lines,
-    q_curation_pipeline,
-    q_dsir_weights,
-    q_weighted_sample,
-    q_domain_quality_ci,
-    q_budget_select,
-    q_gopher_repetition,
-    q_gopher_rules,
-    q_hll_by_source,
-    q_hll_distinct,
-    q_host_hits,
-    q_host_length_outliers,
-    q_host_mirrors,
-    q_html_entities,
-    q_html_markdown,
-    q_incremental_neardup,
-    q_lang_consistency,
-    q_link_farms,
-    q_mojibake_stats,
-    q_oov_rate,
-    q_paywall_detect,
-    q_perplexity_filter,
-    q_pmi_collocations,
-    q_redirect_chains,
-    q_robots_sitemaps,
-    q_script_mix,
-    q_shard_assign,
-    q_soft404,
-    q_source_divergence,
-    q_text_density_blocks,
-    q_truncated_captures,
-    q_warc_http_parse,
-    q_wet_records,
-    q_x_robots_headers,
-    q_zipf_fit,
-)
+SPARK: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLE: dict[str, str] = {}
 
-from .registry.markup import (
-    q_toc_extract,
-    _SQL_TOC_EXTRACT,
-    q_robots_directive_merge,
-    _SQL_ROBOTS_DIRECTIVE_MERGE,
-    q_homoglyph_domains,
-    _sql_homoglyph_domains,
-    _sql_amp_pairs,
-    _sql_charset_sniff,
-    _sql_faq_pairs,
-    _sql_form_census,
-    _sql_image_harvest,
-    _sql_page_assets,
-    _sql_url_safety,
-    _sql_code_blocks,
-    _sql_math_blocks,
-    _sql_license_detect,
-    _sql_cookie_census,
-    _sql_security_headers,
-    _sql_idn_hosts,
-    _sql_opengraph_meta,
-    _sql_srcset_candidates,
-    q_amp_pairs,
-    q_charset_sniff,
-    q_faq_pairs,
-    q_form_census,
-    q_image_harvest,
-    q_page_assets,
-    q_url_safety,
-    q_code_blocks,
-    q_math_blocks,
-    q_license_detect,
-    q_cookie_census,
-    q_idn_hosts,
-    q_security_headers,
-    q_opengraph_meta,
-    q_srcset_candidates,
-)
-from .registry.webarchive import (
-    _SQL_TAR_MEMBERS,
-    _SQL_ZIP_MEMBERS,
-    q_tar_members,
-    q_zip_members,
-    _sql_data_uri_images,
-    _sql_http_dechunk,
-    _sql_http_gunzip,
-    _sql_meta_refresh_redirects,
-    _sql_multipart_parse,
-    _sql_optout_resolution,
-    _sql_warc_gz_members,
-    q_data_uri_images,
-    q_http_dechunk,
-    q_http_gunzip,
-    q_meta_refresh_redirects,
-    q_multipart_parse,
-    q_optout_resolution,
-    q_warc_gz_members,
-)
-
-# ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
-
-SPARK: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # --- round-3 session-4 additions (newest first: driver-visibility)
-    "dsir_weights": q_dsir_weights,
-    "redirect_chains": q_redirect_chains,
-    "incremental_neardup": q_incremental_neardup,
-    "bpe_train": q_bpe_train,
-    "bpe_fertility": q_bpe_fertility,
-    "perplexity_filter": q_perplexity_filter,
-    "wet_records": q_wet_records,
-    "source_divergence": q_source_divergence,
-    "link_farms": q_link_farms,
-    "warc_http_parse": q_warc_http_parse,
-    "host_mirrors": q_host_mirrors,
-    "robots_sitemaps": q_robots_sitemaps,
-    "html_entities": q_html_entities,
-    "oov_rate": q_oov_rate,
-    "collapse_lines": q_collapse_lines,
-    "zipf_fit": q_zipf_fit,
-    "lang_consistency": q_lang_consistency,
-    "cluster_reps": q_cluster_reps,
-    "url_depths": q_url_depths,
-    "extract_headings": q_extract_headings,
-    "html_tables": q_html_tables,
-    "link_relations": q_link_relations,
-    "event_funnel": q_event_funnel,
-    "shipping_priority": q_shipping_priority,
-    "small_qty_revenue": q_small_qty_revenue,
-    "order_distribution": q_order_distribution,
-    "top_supplier": q_top_supplier,
-    "regional_revenue": q_regional_revenue,
-    "lang_pivot": q_lang_pivot,
-    "json_key_census": q_json_key_census,
-    "order_date_spine": q_order_date_spine,
-    "value_histogram": q_value_histogram,
-    "tfidf_pairs": q_tfidf_pairs,
-    "ivf_inertia": q_ivf_inertia,
-    "stream_quality": q_stream_quality,
-    "value_correlation": q_value_correlation,
-    "chi_square": q_chi_square,
-    "host_degrees": q_host_degrees,
-    "edit_distances": q_edit_distances,
-    "lang_unpivot": q_lang_unpivot,
-    "latest_capture": q_latest_capture,
-    "pricing_charge": q_pricing_charge,
-    "param_census": q_param_census,
-    "sitemap_coverage": q_sitemap_coverage,
-    "robots_blockrate": q_robots_blockrate,
-    "sized_part_revenue": q_sized_part_revenue,
-    "idle_rich_customers": q_idle_rich_customers,
-    "json_array_stats": q_json_array_stats,
-    "host_gini": q_host_gini,
-    "snapshot_membership": q_snapshot_membership,
-    "rollup_census": q_rollup_census,
-    "rolling_values": q_rolling_values,
-    "length_ntiles": q_length_quartiles,
-    "brand_suppliers": q_brand_suppliers,
-    "late_priority": q_late_priority,
-    "large_orders": q_large_orders,
-    "cohort_retention": q_cohort_retention,
-    "meta_robots": q_meta_robots,
-    "script_mix": q_script_mix,
-    "text_density_blocks": q_text_density_blocks,
-    "host_length_outliers": q_host_length_outliers,
-    # --- round-3 late additions (never driver-checked: lead the registry)
-    "bm25_scores": q_bm25_scores,
-    "pmi_collocations": q_pmi_collocations,
-    "c4_filters": q_c4_filters,
-    "gopher_rules": q_gopher_rules,
-    "gopher_repetition": q_gopher_repetition,
-    "mojibake_stats": q_mojibake_stats,
-    "shard_assign": q_shard_assign,
-    "hll_distinct": q_hll_distinct,
-    "hll_by_source": q_hll_by_source,
-    "crawl_schedule": q_crawl_schedule,
-    "dom_stats": q_dom_stats,
-    "cdx_revisits": q_cdx_revisits,
-    "curation_pipeline": q_curation_pipeline,
-    "robots_precedence": q_robots_precedence,
-    "host_hits": q_host_hits,
-    # --- driver-visibility first (VERDICT r2 ask #1): these 16 entries were
-    # never reached by the driver's 50-query sweep in rounds 1-2 (it walks
-    # registry-dict order), so they lead the registry; combined with
-    # CORRECTNESS_r02 this makes every entry driver-checked at least once.
-    "dedup_clusters": q_dedup_clusters,
-    "line_dedup": q_line_dedup,
-    "contamination": q_contamination,
-    "quality_classifier": q_quality_classifier,
-    "incremental_dedup": q_incremental_dedup,
-    "chunk_documents": q_chunk_documents,
-    "pack_sequences": q_pack_sequences,
-    "pack_sequence_rows": q_pack_sequence_rows,
-    "bpe_pair_counts": q_bpe_pair_counts,
-    "holdout_split": q_holdout_split,
-    "lm_scores": q_lm_scores,
-    "ivf_refined_assign": q_ivf_refined_assign,
-    "image_decode": q_image_decode,
-    "jpeg_decode": q_jpeg_decode,
-    "gif_decode": q_gif_decode,
-    "image_resize": q_image_resize,
-    "audio_decode": q_audio_decode,
-    "stream_dedup": q_stream_dedup,
-    "stream_incremental_dedup": q_stream_incremental_dedup,
-    # round-3 additions — also never driver-checked yet
-    "warc_binary_parse": q_warc_binary_parse,
-    "robots_rules": q_robots_rules,
-    "sitemap_urls": q_sitemap_urls,
-    "frontier_polite": q_frontier_polite,
-    "anchor_texts": q_anchor_texts,
-    "anchor_index": q_anchor_index,
-    "html_metadata": q_html_metadata,
-    "cdx_index": q_cdx_index,
-    "pdf_extract": q_pdf_extract,
-    "image_ahash": q_image_ahash,
-    "image_near_pairs": q_image_near_pairs,
-    "extraction_eval": q_extraction_eval,
-    # round-3 late additions — never driver-checked either, so they stay
-    # inside the driver's 50-query window (VERDICT r2 ask #1 ordering rule)
-    "dup_substring_runs": q_dup_substring_runs,
-    "char_entropy": q_char_entropy,
-    "cms_counts": q_cms_counts,
-    "error_pages": q_error_pages,
-    "inverted_index": q_inverted_index,
-    "bloom_blocklist": q_bloom_blocklist,
-    "embedding_pq_knn": q_embedding_pq_knn,
-    "url_spam": q_url_spam,
-    "host_template_lines": q_host_template_lines,
-    "recrawl_priority": q_recrawl_priority,
-    "registrable_domains": q_registrable_domains,
-    "domain_rollup": q_domain_rollup,
-    "host_page_cap": q_host_page_cap,
-    "length_quantiles": q_length_quantiles,
-    # extraction pipeline
-    "extract_main_text": q_extract_main_text,
-    "extract_sql_surface": q_extract_sql_surface,
-    "extract_stats": q_extract_stats,
-    "extract_fields_vn": q_extract_fields_vn,
-    "extract_tables": q_extract_tables,
-    "explode_spans": q_explode_spans,
-    "merge_documents_vn": q_merge_documents_vn,
-    "merge_split_vn": q_merge_split_vn,
-    "span_scores": q_span_scores,
-    "partitioned_sink_readback": q_partitioned_sink_readback,
-    # relational battery
-    "pricing_summary": q_pricing_summary,
-    "revenue_by_nation": q_revenue_by_nation,
-    "top_brands": q_top_brands,
-    "order_ranks": q_order_ranks,
-    "sessionize_events": q_sessionize_events,
-    "windowed_event_counts": q_windowed_event_counts,
-    "list_documents_page": q_list_documents_page,
-    "point_lookup": q_point_lookup,
-    "delete_documents": q_delete_documents,
-    "update_documents": q_update_documents,
-    "adjacent_word_overlap": q_adjacent_word_overlap,
-    "asof_events": q_asof_events,
-    "corpus_rollup": q_corpus_rollup,
-    "stratified_sample": q_stratified_sample,
-    "domain_profile": q_domain_profile,
-    # text analysis
-    "token_counts": q_token_counts,
-    "lang_id": q_lang_id,
-    "quality_scores": q_quality_scores,
-    "corpus_length_stats": q_corpus_length_stats,
-    "fingerprints": q_fingerprints,
-    "nfc_fingerprints": q_nfc_fingerprints,
-    "redact_pii": q_redact_pii,
-    "top_terms": q_top_terms,
-    "tfidf_terms": q_tfidf_terms,
-    "curation_funnel": q_curation_funnel,
-    "curation_funnel_neardup": q_curation_funnel_neardup,
-    "mixture_weights": q_mixture_weights,
-    "canonical_urls": q_canonical_urls,
-    "extract_links": q_extract_links,
-    "host_pagerank": q_host_pagerank,
-    "crawl_frontier": q_crawl_frontier,
-    "warc_parse": q_warc_parse,
-    "crawl_diff": q_crawl_diff,
-    "kmv_distinct": q_kmv_distinct,
-    # dedup family
-    "dedup_exact": q_dedup_exact,
-    "dedup_stats": q_dedup_stats,
-    "events_json": q_events_json,
-    "minhash_bands": q_minhash_bands,
-    "minhash_pairs": q_minhash_pairs,
-    "simhash": q_simhash,
-    "simhash_pairs": q_simhash_pairs,
-    "ngram_jaccard": q_ngram_jaccard,
-    "neardup_verified": q_neardup_verified,
-    # text analysis (advanced)
-    "repetition_stats": q_repetition_stats,
-    "winnow_fingerprints": q_winnow_fingerprints,
-    # similarity search
-    "embedding_knn": q_embedding_knn,
-    "embedding_batch_knn": q_embedding_batch_knn,
-    "embedding_ivf_knn": q_embedding_ivf_knn,
-    "embedding_knn_bucketed": q_embedding_knn_bucketed,
-    "embedding_near_dups": q_embedding_near_dups,
-    # multimodal + streaming
-    "multimodal_features": q_multimodal_features,
-    "multimodal_frames": q_multimodal_frames,
-    "stream_windowed_counts": q_stream_windowed_counts,
-    # custom stateful streaming — fully oracle-checked since round 2
-    # (event-time timeout emits the open tails)
-    "stream_sessionize": q_stream_sessionize,
-    # --- round-4 additions (stay BEHIND the never-checked rotation head)
-    "tiff_decode": q_tiff_decode,
-    "webp_decode": q_webp_decode,
-    "audio_features": q_audio_features,
-    "cdc_chunks": q_cdc_chunks,
-    "jpeg_progressive": q_jpeg_progressive,
-    "semantic_dedup": q_semantic_dedup,
-    "audio_segments": q_audio_segments,
-    "video_frames": q_video_frames,
-    "revenue_forecast": q_revenue_forecast,
-    "volume_shipping": q_volume_shipping,
-    "market_share": q_market_share,
-    "returned_items": q_returned_items,
-    "promo_revenue": q_promo_revenue,
-    "waiting_suppliers": q_waiting_suppliers,
-    "pii_luhn": q_pii_luhn,
-    "product_profit": q_product_profit,
-    "important_stock": q_important_stock,
-    "promotion_suppliers": q_promotion_suppliers,
-    "min_cost_supplier": q_min_cost_supplier,
-    "shipmode_priority": q_shipmode_priority,
-    "bracket_revenue": q_bracket_revenue,
-    "idle_customers": q_idle_customers,
-    "jsonld_extract": q_jsonld_extract,
-    "hreflang_reciprocity": q_hreflang_reciprocity,
-    "feed_entries": q_feed_entries,
-    "x_robots_headers": q_x_robots_headers,
-    "cache_policy": q_cache_policy,
-    "truncated_captures": q_truncated_captures,
-    "soft404": q_soft404,
-    "readability": q_readability,
-    "paywall_detect": q_paywall_detect,
-    "trust_rank": q_trust_rank,
-    "html_markdown": q_html_markdown,
-    "ip_ranges": q_ip_ranges,
-    "zorder_docs": q_zorder_docs,
-    "legal_citations": q_legal_citations,
-    "publish_dates": q_publish_dates,
-    "record_linkage": q_record_linkage,
-    "outline_numbering": q_outline_numbering,
-    "capture_intervals": q_capture_intervals,
-    "host_communities": q_host_communities,
-    "weighted_sample": q_weighted_sample,
-    "containment_pairs": q_containment_pairs,
-    "cube_census": q_cube_census,
-    "heavy_hitters": q_heavy_hitters,
-    "k_core": q_k_core,
-    "column_profile": q_column_profile,
-    "domain_quality_ci": q_domain_quality_ci,
-    "bitext_candidates": q_bitext_candidates,
-    "prefix_jaccard": q_prefix_jaccard,
-    "budget_select": q_budget_select,
-    # --- round-4 session-10 additions (behind the rotation head)
-    "triangle_count": q_triangle_count,
-    "cocitation_pairs": q_cocitation_pairs,
-    "pareto_frontier": q_pareto_frontier,
-    "kmv_overlap": q_kmv_overlap,
-    "event_transitions": q_event_transitions,
-    "session_paths": q_session_paths,
-    "event_bursts": q_event_bursts,
-    "ngram_novelty": q_ngram_novelty,
-    "exif_extract": q_exif_extract,
-    "source_dup_matrix": q_source_dup_matrix,
-    "score_calibration": q_score_calibration,
-    "compression_ratio": q_compression_ratio,
-    "microdata_extract": q_microdata_extract,
-    "wat_records": q_wat_records,
-    "orc_sink_readback": q_orc_sink_readback,
-    "jsonl_sink_readback": q_jsonl_sink_readback,
-    "csv_sink_readback": q_csv_sink_readback,
-    "csv_parse_isolation": q_csv_parse_isolation,
-    "neardup_eval": q_neardup_eval,
-    "shard_manifest": q_shard_manifest,
-    "seed_reachability": q_seed_reachability,
-    "dup_family_histogram": q_dup_family_histogram,
-    "quantile_drift": q_quantile_drift,
-    # --- round-4 session-11 additions (behind the rotation head)
-    "k_anonymity": q_k_anonymity,
-    "functional_dependencies": q_functional_dependencies,
-    "winsorized_stats": q_winsorized_stats,
-    "url_templates": q_url_templates,
-    "degree_assortativity": q_degree_assortativity,
-    "ann_recall_eval": q_ann_recall_eval,
-    "rank_fusion": q_rank_fusion,
-    # --- round-4 session-12 additions (behind the rotation head)
-    "temperature_mixture": q_temperature_mixture,
-    "robots_drift": q_robots_drift,
-    "ivf_admission": q_ivf_admission,
-    "centroid_drift": q_centroid_drift,
-    "hyperball": q_hyperball,
-    "bloom_dedup": q_bloom_dedup,
-    "stream_enrich": q_stream_enrich,
-    "filter_agreement": q_filter_agreement,
-    "epoch_plan": q_epoch_plan,
-    "langid_confusion": q_langid_confusion,
-    "warc_segments": q_warc_segments,
-    "rollup_merge": q_rollup_merge,
-    "contrastive_triplets": q_contrastive_triplets,
-    "schema_evolution": q_schema_evolution,
-    "neighborhood_function": q_neighborhood_function,
-    "robots_wildcards": q_robots_wildcards,
-    "dedup_bcubed": q_dedup_bcubed,
-    "bootstrap_ci": q_bootstrap_ci,
-    "stream_attribution": q_stream_attribution,
-    # --- round-4 session-13 additions
-    "linreg_train": q_linreg_train,
-    "negative_sampling_table": q_negative_sampling_table,
-    "url_survival": q_url_survival,
-    "bucketed_join_readback": q_bucketed_join_readback,
-    "split_leakage": q_split_leakage,
-    "feature_hashing": q_feature_hashing,
-    "kneser_ney_bigrams": q_kneser_ney_bigrams,
-    "global_shuffle": q_global_shuffle,
-    "logreg_train_gd": q_logreg_train_gd,
-    "minhash_merge": q_minhash_merge,
-    "curriculum_order": q_curriculum_order,
-    "stream_minhash": q_stream_minhash,
-    "cluster_sample": q_cluster_sample,
-    "langid_spans": q_langid_spans,
-    "word_dropout": q_word_dropout,
-    "multiprobe_knn": q_multiprobe_knn,
-    "conditional_entropy": q_conditional_entropy,
-    "vocab_coverage": q_vocab_coverage,
-    "byte_fertility": q_byte_fertility,
-    "filter_ensemble": q_filter_ensemble,
-    "ndcg_eval": q_ndcg_eval,
-    "percentile_normalize": q_percentile_normalize,
-    "neyman_allocation": q_neyman_allocation,
-    "crossval_ols": q_crossval_ols,
-    "stream_dedup_wm": q_stream_dedup_wm,
-    "fixed_size_sample": q_fixed_size_sample,
-    "code_detect": q_code_detect,
-    "deleted_interpolation": q_deleted_interpolation,
-    "threshold_select": q_threshold_select,
-    "ks_statistic": q_ks_statistic,
-    "auc_exact": q_auc_exact,
-    "span_corruption": q_span_corruption,
-    "dedup_diversity": q_dedup_diversity,
-    "heldout_perplexity": q_heldout_perplexity,
-    "best_snippet": q_best_snippet,
-    "shared_prefixes": q_shared_prefixes,
-    "term_burstiness": q_term_burstiness,
-    "quality_residuals": q_quality_residuals,
-    "log2_histogram": q_log2_histogram,
-    "soft_dedup_weights": q_soft_dedup_weights,
-    "dedup_ari": q_dedup_ari,
-    "image_alt_pairs": q_image_alt_pairs,
-    "random_projection": q_random_projection,
-    "jl_distortion": q_jl_distortion,
-    "mmr_select": q_mmr_select,
-    "kendall_tau": q_kendall_tau,
-    "spearman_rho": q_spearman_rho,
-    "mrr_eval": q_mrr_eval,
-    "avg_precision": q_avg_precision,
-    "rbo_overlap": q_rbo_overlap,
-    "hill_tail_index": q_hill_tail_index,
-    "keyness_terms": q_keyness_terms,
-    "simpson_diversity": q_simpson_diversity,
-    "welch_ttest": q_welch_ttest,
-    "cvm_statistic": q_cvm_statistic,
-    "reliability_bins": q_reliability_bins,
-    "waterfill_allocation": q_waterfill_allocation,
-    "otsu_threshold": q_otsu_threshold,
-    "compaction_readback": q_compaction_readback,
-    "vocab_churn": q_vocab_churn,
-    "lm_greedy_decode": q_lm_greedy_decode,
-    "benford_deviation": q_benford_deviation,
-    "runs_test": q_runs_test,
-    "grid_dbscan": q_grid_dbscan,
-    "novelty_curve": q_novelty_curve,
-    "heaps_law": q_heaps_law,
-    "event_acf": q_event_acf,
-    "cdc_apply": q_cdc_apply,
-    "cusum_changepoint": q_cusum_changepoint,
-    "good_turing": q_good_turing,
-    "content_type_mismatch": q_content_type_mismatch,
-    "mcnemar_filters": q_mcnemar_filters,
-    "mlm_mask_plan": q_mlm_mask_plan,
-    "dedup_purity": q_dedup_purity,
-    "theil_index": q_theil_index,
-    "symspell_variants": q_symspell_variants,
-    "hapax_share": q_hapax_share,
-    "burrows_delta": q_burrows_delta,
-    "markov_stationary": q_markov_stationary,
-    "image_dup_clusters": q_image_dup_clusters,
-    "stream_sniff_census": q_stream_sniff_census,
-    "chao1_richness": q_chao1_richness,
-    "emd_drift": q_emd_drift,
-    "query_likelihood": q_query_likelihood,
-    "interarrival_stats": q_interarrival_stats,
-    "pair_threshold_curve": q_pair_threshold_curve,
-    "pps_sample": q_pps_sample,
-    "cms_error_audit": q_cms_error_audit,
-    "bloom_fpr_audit": q_bloom_fpr_audit,
-    "prefix_filter_pairs": q_prefix_filter_pairs,
-    "hll_rolling_distinct": q_hll_rolling_distinct,
-    "dedup_key_agreement": q_dedup_key_agreement,
-    "stream_hll_registers": q_stream_hll_registers,
-    "salted_group_counts": q_salted_group_counts,
-    "link_locality": q_link_locality,
-    "title_dup_census": q_title_dup_census,
-    # --- round-4 session-16 additions (behind the rotation head)
-    "consistent_hash_moves": q_consistent_hash_moves,
-    "l_diversity": q_l_diversity,
-    "copurchase_pairs": q_copurchase_pairs,
-    "rocchio_expansion": q_rocchio_expansion,
-    "random_walks": q_random_walks,
-    "http_cache_plan": q_http_cache_plan,
-    "stream_cms_registers": q_stream_cms_registers,
-    "coverage_curve": q_coverage_curve,
-    "dow_seasonality": q_dow_seasonality,
-    "index_pruning": q_index_pruning,
-    "greedy_cover": q_greedy_cover,
-    "pagerank_convergence": q_pagerank_convergence,
-    "dehyphenate": q_dehyphenate,
-    "pagination_extract": q_pagination_extract,
-    "breadcrumb_census": q_breadcrumb_census,
-    "page_series_gaps": q_page_series_gaps,
-    "canonical_pick": q_canonical_pick,
-    "source_similarity": q_source_similarity,
-    "stitch_series": q_stitch_series,
-    # --- round-4 session-18 additions
-    "warc_gz_members": q_warc_gz_members,
-    "http_dechunk": q_http_dechunk,
-    "http_gunzip": q_http_gunzip,
-    "data_uri_images": q_data_uri_images,
-    "meta_refresh_redirects": q_meta_refresh_redirects,
-    "optout_resolution": q_optout_resolution,
-    "multipart_parse": q_multipart_parse,
-    "idn_hosts": q_idn_hosts,
-    "srcset_candidates": q_srcset_candidates,
-    "opengraph_meta": q_opengraph_meta,
-    "charset_sniff": q_charset_sniff,
-    "tiff_lzw_decode": q_tiff_lzw_decode,
-    "cookie_census": q_cookie_census,
-    "security_headers": q_security_headers,
-    "amp_pairs": q_amp_pairs,
-    "license_detect": q_license_detect,
-    "faq_pairs": q_faq_pairs,
-    "split_sentences": q_split_sentences,
-    "form_census": q_form_census,
-    "phash_groups": q_phash_groups,
-    "code_blocks": q_code_blocks,
-    "math_blocks": q_math_blocks,
-    "wordpiece_segments": q_wordpiece_segments,
-    "wordpiece_usage": q_wordpiece_usage,
-    "wordpiece_fertility": q_wordpiece_fertility,
-    "image_harvest": q_image_harvest,
-    "stream_media_decode": q_stream_media_decode,
-    "png_variants_decode": q_png_variants_decode,
-    "ico_decode": q_ico_decode,
-    "page_assets": q_page_assets,
-    "image_colors": q_image_colors,
-    "zip_members": q_zip_members,
-    "g711_decode": q_g711_decode,
-    "media_pipeline": q_media_pipeline,
-    "tar_members": q_tar_members,
-    "url_safety": q_url_safety,
-    # --- round-4 session-19 additions (behind the rotation head)
-    "xml_sink_readback": q_xml_sink_readback,
-    "xml_field_extract": q_xml_field_extract,
-    "variant_shred": q_variant_shred,
-    "variant_explode_tags": q_variant_explode_tags,
-    "homoglyph_domains": q_homoglyph_domains,
-    "session_window_agg": q_session_window_agg,
-    "udtf_shingles": q_udtf_shingles,
-    "stream_session_window": q_stream_session_window,
-    "observed_metrics": q_observed_metrics,
-    "ansi_safety": q_ansi_safety,
-    "bitmap_distinct": q_bitmap_distinct,
-    "listagg_sources": q_listagg_sources,
-    "bloom_sink_readback": q_bloom_sink_readback,
-    "hll_native_distinct": q_hll_native_distinct,
-    # --- round-4 session-20 additions (behind the rotation head)
-    "t_closeness": q_t_closeness,
-    "mann_whitney": q_mann_whitney,
-    "fleiss_kappa": q_fleiss_kappa,
-    "shannon_diversity": q_shannon_diversity,
-    "peak_concurrency": q_peak_concurrency,
-    "quantile_sketch_merge": q_quantile_sketch_merge,
-    "toc_extract": q_toc_extract,
-    "cdx_zipnum": q_cdx_zipnum,
-    "unigram_segments": q_unigram_segments,
-    "unigram_fertility": q_unigram_fertility,
-    "sentence_dedup": q_sentence_dedup,
-    "stream_quantile_sketch": q_stream_quantile_sketch,
-    "image_histogram": q_image_histogram,
-    "concentration_indices": q_concentration_indices,
-    "psi_drift": q_psi_drift,
-    "brier_score": q_brier_score,
-    "seasonal_anomaly": q_seasonal_anomaly,
-    "measurements_extract": q_measurements_extract,
-    "quote_mining": q_quote_mining,
-    "embedding_sq8": q_embedding_sq8,
-    "sentence_chunks": q_sentence_chunks,
-    "harmonic_centrality": q_harmonic_centrality,
-    "robots_directive_merge": q_robots_directive_merge,
-    "bowtie_membership": q_bowtie_membership,
-    "rag_corpus_pipeline": q_rag_corpus_pipeline,
-    "markov_entropy_rate": q_markov_entropy_rate,
-    "sq8_recall": q_sq8_recall,
-    "skew_join_salted": q_skew_join_salted,
-    "range_partition_audit": q_range_partition_audit,
-    "sliding_event_counts": q_sliding_event_counts,
-}
-
-ORACLE: dict[str, str] = {
-    "dsir_weights": _SQL_DSIR_WEIGHTS,
-    "redirect_chains": _SQL_REDIRECT_CHAINS,
-    "incremental_neardup": _sql_incremental_neardup(),
-    "bpe_train": _sql_bpe_train(),
-    "bpe_fertility": _sql_bpe_fertility(),
-    "perplexity_filter": _SQL_PERPLEXITY_FILTER,
-    "wet_records": _SQL_WET_RECORDS,
-    "source_divergence": _SQL_SOURCE_DIVERGENCE,
-    "link_farms": _SQL_LINK_FARMS,
-    "warc_http_parse": _SQL_WARC_HTTP_PARSE,
-    "host_mirrors": _sql_host_mirrors(),
-    "robots_sitemaps": _SQL_ROBOTS_SITEMAPS,
-    "html_entities": _sql_html_entities(),
-    "oov_rate": _SQL_OOV_RATE,
-    "collapse_lines": _SQL_COLLAPSE_LINES,
-    "zipf_fit": _SQL_ZIPF_FIT,
-    "lang_consistency": _SQL_LANG_CONSISTENCY,
-    "cluster_reps": _SQL_CLUSTER_REPS,
-    "url_depths": _SQL_URL_DEPTHS,
-    "extract_headings": _SQL_EXTRACT_HEADINGS,
-    "html_tables": _SQL_HTML_TABLES,
-    "link_relations": _SQL_LINK_RELATIONS,
-    "event_funnel": _SQL_EVENT_FUNNEL,
-    "shipping_priority": _SQL_SHIPPING_PRIORITY,
-    "small_qty_revenue": _SQL_SMALL_QTY_REVENUE,
-    "order_distribution": _SQL_ORDER_DISTRIBUTION,
-    "top_supplier": _SQL_TOP_SUPPLIER,
-    "regional_revenue": _SQL_REGIONAL_REVENUE,
-    "lang_pivot": _sql_lang_pivot(),
-    "json_key_census": _SQL_JSON_KEY_CENSUS,
-    "order_date_spine": _SQL_ORDER_DATE_SPINE,
-    "value_histogram": _SQL_VALUE_HISTOGRAM,
-    "tfidf_pairs": _SQL_TFIDF_PAIRS,
-    "ivf_inertia": _SQL_IVF_INERTIA,
-    "stream_quality": _SQL_STREAM_QUALITY,
-    "value_correlation": _SQL_VALUE_CORRELATION,
-    "chi_square": _SQL_CHI_SQUARE,
-    "host_degrees": _SQL_HOST_DEGREES,
-    "edit_distances": _SQL_EDIT_DISTANCES,
-    "lang_unpivot": _sql_lang_unpivot(),
-    "latest_capture": _SQL_LATEST_CAPTURE,
-    "pricing_charge": _SQL_PRICING_CHARGE,
-    "param_census": _SQL_PARAM_CENSUS,
-    "sitemap_coverage": _SQL_SITEMAP_COVERAGE,
-    "robots_blockrate": _SQL_ROBOTS_BLOCKRATE,
-    "sized_part_revenue": _SQL_SIZED_PART_REVENUE,
-    "idle_rich_customers": _SQL_IDLE_RICH_CUSTOMERS,
-    "json_array_stats": _SQL_JSON_ARRAY_STATS,
-    "host_gini": _SQL_HOST_GINI,
-    "snapshot_membership": _SQL_SNAPSHOT_MEMBERSHIP,
-    "rollup_census": _SQL_ROLLUP_CENSUS,
-    "rolling_values": _SQL_ROLLING_VALUES,
-    "length_ntiles": _SQL_LENGTH_QUARTILES_NTILE,
-    "brand_suppliers": _SQL_BRAND_SUPPLIERS,
-    "late_priority": _SQL_LATE_PRIORITY,
-    "large_orders": _SQL_LARGE_ORDERS,
-    "cohort_retention": _SQL_COHORT_RETENTION,
-    "meta_robots": _SQL_META_ROBOTS,
-    "script_mix": _sql_script_mix(),
-    "text_density_blocks": _SQL_TEXT_DENSITY_BLOCKS,
-    "host_length_outliers": _SQL_HOST_LENGTH_OUTLIERS,
-    "bm25_scores": _SQL_BM25,
-    "pmi_collocations": _SQL_PMI,
-    "c4_filters": _SQL_C4,
-    "gopher_rules": _SQL_GOPHER_RULES,
-    "gopher_repetition": _SQL_GOPHER_REPETITION,
-    "mojibake_stats": _SQL_MOJIBAKE,
-    "shard_assign": _SQL_SHARD_ASSIGN,
-    "hll_distinct": _SQL_HLL_DISTINCT,
-    "hll_by_source": _SQL_HLL_BY_SOURCE,
-    "crawl_schedule": _SQL_CRAWL_SCHEDULE,
-    "dom_stats": _SQL_DOM_STATS,
-    "cdx_revisits": _sql_cdx_revisits(),
-    "curation_pipeline": _SQL_CURATION_PIPELINE,
-    "robots_precedence": _SQL_ROBOTS_PRECEDENCE,
-    "host_hits": _sql_host_hits(),
-    "extract_main_text": _SQL_EXTRACT_MAIN,
-    "extract_sql_surface": _SQL_EXTRACT_MAIN,
-    "extract_stats": _SQL_EXTRACT_STATS,
-    "extract_fields_vn": _SQL_EXTRACT_FIELDS_VN,
-    "extract_tables": _SQL_EXTRACT_TABLES,
-    "explode_spans": _SQL_EXPLODE_SPANS,
-    "merge_documents_vn": _SQL_MERGE_VN,
-    "merge_split_vn": _SQL_MERGE_SPLIT_VN,
-    "span_scores": _SQL_SPAN_SCORES,
-    "partitioned_sink_readback": _SQL_PARTITIONED_SINK,
-    "pricing_summary": _SQL_PRICING,
-    "revenue_by_nation": _SQL_REVENUE_NATION,
-    "top_brands": _SQL_TOP_BRANDS,
-    "order_ranks": _SQL_ORDER_RANKS,
-    "sessionize_events": _SQL_SESSIONIZE,
-    "windowed_event_counts": _SQL_WINDOWED_COUNTS,
-    "list_documents_page": _SQL_LIST_DOCS,
-    "point_lookup": _SQL_POINT_LOOKUP,
-    "delete_documents": _SQL_DELETE_DOCS,
-    "update_documents": _SQL_UPDATE_DOCS,
-    "adjacent_word_overlap": _SQL_WORD_OVERLAP,
-    "asof_events": _SQL_ASOF_EVENTS,
-    "corpus_rollup": _SQL_CORPUS_ROLLUP,
-    "stratified_sample": _SQL_STRATIFIED_SAMPLE,
-    "domain_profile": _sql_domain_profile(),
-    "token_counts": _SQL_TOKEN_COUNTS,
-    "lang_id": _sql_lang_id(),
-    "quality_scores": _SQL_QUALITY,
-    "corpus_length_stats": _SQL_CORPUS_STATS,
-    "fingerprints": _SQL_FINGERPRINTS,
-    "nfc_fingerprints": _SQL_NFC_FP,
-    "redact_pii": _SQL_REDACT_PII,
-    "top_terms": _SQL_TOP_TERMS,
-    "tfidf_terms": _SQL_TFIDF_TERMS,
-    "curation_funnel": _SQL_CURATION_FUNNEL,
-    "curation_funnel_neardup": _SQL_CURATION_FUNNEL_NEARDUP,
-    "mixture_weights": _SQL_MIXTURE_WEIGHTS,
-    "canonical_urls": _SQL_CANONICAL_URLS,
-    "extract_links": _sql_extract_links(),
-    "host_pagerank": _sql_host_pagerank(),
-    "crawl_frontier": _sql_crawl_frontier(),
-    "warc_parse": _sql_warc_parse(),
-    "warc_binary_parse": _sql_warc_binary_parse(),
-    "robots_rules": _SQL_ROBOTS_RULES,
-    "sitemap_urls": _SQL_SITEMAP_URLS,
-    "frontier_polite": _SQL_FRONTIER_POLITE,
-    "anchor_texts": _sql_anchor_texts(),
-    "anchor_index": _sql_anchor_index(),
-    "html_metadata": _SQL_HTML_METADATA,
-    "cdx_index": _sql_cdx_index(),
-    "pdf_extract": _SQL_PDF_EXTRACT,
-    "image_ahash": _SQL_IMAGE_AHASH,
-    "image_near_pairs": _SQL_IMAGE_NEAR_PAIRS,
-    "extraction_eval": _SQL_EXTRACTION_EVAL,
-    "crawl_diff": _SQL_CRAWL_DIFF,
-    "kmv_distinct": _SQL_KMV_DISTINCT,
-    "dedup_exact": _SQL_DEDUP_EXACT,
-    "dedup_stats": _SQL_DEDUP_STATS,
-    "events_json": _SQL_EVENTS_JSON,
-    "minhash_bands": _SQL_MINHASH_BANDS,
-    "minhash_pairs": _SQL_MINHASH_PAIRS,
-    "simhash": _SQL_SIMHASH,
-    "simhash_pairs": _SQL_SIMHASH_PAIRS,
-    "ngram_jaccard": _SQL_NGRAM_JACCARD,
-    "dup_substring_runs": _SQL_DUP_SUBSTRING_RUNS,
-    "neardup_verified": _SQL_NEARDUP_VERIFIED,
-    "dedup_clusters": _SQL_DEDUP_CLUSTERS,
-    "line_dedup": _SQL_LINE_DEDUP,
-    "contamination": _SQL_CONTAMINATION,
-    "quality_classifier": _SQL_QUALITY_CLF,
-    "incremental_dedup": _SQL_INCREMENTAL_DEDUP,
-    "chunk_documents": _SQL_CHUNK_DOCS,
-    "pack_sequences": _SQL_PACK_SEQUENCES,
-    "pack_sequence_rows": _SQL_PACK_SEQUENCE_ROWS,
-    "bpe_pair_counts": _SQL_BPE_PAIRS,
-    "holdout_split": _SQL_HOLDOUT_SPLIT,
-    "lm_scores": _SQL_LM_SCORES,
-    "repetition_stats": _SQL_REPETITION,
-    "char_entropy": _SQL_CHAR_ENTROPY,
-    "cms_counts": _sql_cms_counts(),
-    "error_pages": _sql_error_pages(),
-    "inverted_index": _SQL_INVERTED_INDEX,
-    "bloom_blocklist": _SQL_BLOOM_BLOCKLIST,
-    "url_spam": _sql_url_spam(),
-    "host_template_lines": _SQL_HOST_TEMPLATE_LINES,
-    "recrawl_priority": _SQL_RECRAWL_PRIORITY,
-    "registrable_domains": _sql_registrable_domains(),
-    "domain_rollup": _sql_domain_rollup(),
-    "host_page_cap": _SQL_HOST_PAGE_CAP,
-    "length_quantiles": _SQL_LENGTH_QUANTILES,
-    "winnow_fingerprints": _SQL_WINNOW,
-    "embedding_knn": _sql_embedding_knn(),
-    "embedding_batch_knn": _sql_embedding_batch_knn(),
-    "embedding_ivf_knn": _sql_embedding_ivf_knn(),
-    "ivf_refined_assign": _sql_ivf_refined_assign(),
-    "embedding_knn_bucketed": _sql_embedding_knn_bucketed(),
-    "embedding_pq_knn": _sql_embedding_pq_knn(),
-    "embedding_near_dups": _sql_embedding_near_dups(),
-    "multimodal_features": _SQL_MULTIMODAL,
-    "multimodal_frames": _SQL_MULTIMODAL_FRAMES,
-    "image_decode": _SQL_IMAGE_DECODE,
-    "jpeg_decode": _SQL_JPEG_DECODE,
-    "gif_decode": _SQL_GIF_DECODE,
-    "image_resize": _SQL_IMAGE_RESIZE,
-    "audio_decode": _SQL_AUDIO_DECODE,
-    # streaming results equal their batch formulations
-    "stream_dedup": _SQL_STREAM_DEDUP,
-    "stream_incremental_dedup": _SQL_STREAM_INCR_DEDUP,
-    "stream_windowed_counts": _SQL_WINDOWED_COUNTS,
-    "stream_sessionize": _SQL_SESSIONIZE,
-    "tiff_decode": _SQL_TIFF_DECODE,
-    "webp_decode": _SQL_WEBP_DECODE,
-    "audio_features": _SQL_AUDIO_FEATURES,
-    "cdc_chunks": _SQL_CDC_CHUNKS,
-    "jpeg_progressive": _SQL_JPEG_PROGRESSIVE,
-    "semantic_dedup": _SQL_SEMANTIC_DEDUP,
-    "audio_segments": _SQL_AUDIO_SEGMENTS,
-    "video_frames": _SQL_VIDEO_FRAMES,
-    "revenue_forecast": _SQL_REVENUE_FORECAST,
-    "volume_shipping": _SQL_VOLUME_SHIPPING,
-    "market_share": _SQL_MARKET_SHARE,
-    "returned_items": _SQL_RETURNED_ITEMS,
-    "promo_revenue": _SQL_PROMO_REVENUE,
-    "waiting_suppliers": _SQL_WAITING_SUPPLIERS,
-    "pii_luhn": _SQL_PII_LUHN,
-    "product_profit": _SQL_PRODUCT_PROFIT,
-    "important_stock": _SQL_IMPORTANT_STOCK,
-    "promotion_suppliers": _SQL_PROMOTION_SUPPLIERS,
-    "min_cost_supplier": _SQL_MIN_COST_SUPPLIER,
-    "shipmode_priority": _SQL_SHIPMODE_PRIORITY,
-    "bracket_revenue": _SQL_BRACKET_REVENUE,
-    "idle_customers": _SQL_IDLE_CUSTOMERS,
-    "jsonld_extract": _SQL_JSONLD_EXTRACT,
-    "hreflang_reciprocity": _SQL_HREFLANG_RECIPROCITY,
-    "feed_entries": _SQL_FEED_ENTRIES,
-    "x_robots_headers": _SQL_X_ROBOTS_HEADERS,
-    "cache_policy": _SQL_CACHE_POLICY,
-    "truncated_captures": _SQL_TRUNCATED_CAPTURES,
-    "soft404": _SQL_SOFT404,
-    "readability": _SQL_READABILITY,
-    "paywall_detect": _SQL_PAYWALL_DETECT,
-    "trust_rank": _sql_trust_rank(),
-    "html_markdown": _sql_html_markdown(),
-    "ip_ranges": _SQL_IP_RANGES,
-    "zorder_docs": _sql_zorder_docs(),
-    "legal_citations": _SQL_LEGAL_CITATIONS,
-    "publish_dates": _SQL_PUBLISH_DATES,
-    "record_linkage": _SQL_RECORD_LINKAGE,
-    "outline_numbering": _SQL_OUTLINE_NUMBERING,
-    "capture_intervals": _SQL_CAPTURE_INTERVALS,
-    "host_communities": _sql_host_communities(),
-    "weighted_sample": _SQL_WEIGHTED_SAMPLE,
-    "containment_pairs": _SQL_CONTAINMENT_PAIRS,
-    "cube_census": _SQL_CUBE_CENSUS,
-    "heavy_hitters": _SQL_HEAVY_HITTERS,
-    "k_core": _SQL_K_CORE,
-    "column_profile": _sql_column_profile(),
-    "domain_quality_ci": _SQL_DOMAIN_QUALITY_CI,
-    "bitext_candidates": _SQL_BITEXT_CANDIDATES,
-    "prefix_jaccard": _SQL_PREFIX_JACCARD,
-    "budget_select": _SQL_BUDGET_SELECT,
-    "triangle_count": _SQL_TRIANGLE_COUNT,
-    "cocitation_pairs": _SQL_COCITATION_PAIRS,
-    "pareto_frontier": _SQL_PARETO_FRONTIER,
-    "kmv_overlap": _SQL_KMV_OVERLAP,
-    "event_transitions": _SQL_EVENT_TRANSITIONS,
-    "session_paths": _SQL_SESSION_PATHS,
-    "event_bursts": _SQL_EVENT_BURSTS,
-    "ngram_novelty": _SQL_NGRAM_NOVELTY,
-    "exif_extract": _SQL_EXIF_EXTRACT,
-    "source_dup_matrix": _SQL_SOURCE_DUP_MATRIX,
-    "score_calibration": _SQL_SCORE_CALIBRATION,
-    # compression_ratio: genuinely non-SQL (zlib) — rows-only driver check,
-    # pytest zlib oracle pins exactness
-    "microdata_extract": _SQL_MICRODATA_EXTRACT,
-    "wat_records": _sql_wat_records(),
-    "orc_sink_readback": _SQL_ORC_SINK_READBACK,
-    "jsonl_sink_readback": _SQL_JSONL_SINK_READBACK,
-    "csv_sink_readback": _SQL_CSV_SINK_READBACK,
-    "csv_parse_isolation": _SQL_CSV_PARSE_ISOLATION,
-    "neardup_eval": _sql_neardup_eval(),
-    "shard_manifest": _sql_shard_manifest(),
-    "seed_reachability": _sql_seed_reachability(),
-    "dup_family_histogram": _SQL_DUP_FAMILY_HISTOGRAM,
-    "quantile_drift": _sql_quantile_drift(),
-    "k_anonymity": _SQL_K_ANONYMITY,
-    "functional_dependencies": _sql_functional_dependencies(),
-    "winsorized_stats": _SQL_WINSORIZED_STATS,
-    "url_templates": _SQL_URL_TEMPLATES,
-    "degree_assortativity": _SQL_DEGREE_ASSORTATIVITY,
-    "ann_recall_eval": _sql_ann_recall_eval(),
-    "rank_fusion": _sql_rank_fusion(),
-    "temperature_mixture": _SQL_TEMPERATURE_MIXTURE,
-    "robots_drift": _SQL_ROBOTS_DRIFT,
-    "ivf_admission": _SQL_IVF_ADMISSION,
-    "centroid_drift": _SQL_CENTROID_DRIFT,
-    "hyperball": _sql_hyperball(),
-    "bloom_dedup": _sql_bloom_dedup(),
-    "stream_enrich": _SQL_STREAM_ENRICH,
-    "filter_agreement": _SQL_FILTER_AGREEMENT,
-    "epoch_plan": _SQL_EPOCH_PLAN,
-    "langid_confusion": _sql_langid_confusion(),
-    "warc_segments": _SQL_WARC_SEGMENTS,
-    "rollup_merge": _SQL_ROLLUP_MERGE,
-    "contrastive_triplets": _SQL_CONTRASTIVE_TRIPLETS,
-    "schema_evolution": _SQL_SCHEMA_EVOLUTION,
-    "neighborhood_function": _sql_neighborhood_function(),
-    "robots_wildcards": _SQL_ROBOTS_WILDCARDS,
-    "dedup_bcubed": _SQL_DEDUP_BCUBED,
-    "bootstrap_ci": _sql_bootstrap_ci(),
-    "stream_attribution": _SQL_STREAM_ATTRIBUTION,
-    "linreg_train": _SQL_LINREG_TRAIN,
-    "negative_sampling_table": _SQL_NEGATIVE_SAMPLING_TABLE,
-    "url_survival": _SQL_URL_SURVIVAL,
-    "bucketed_join_readback": _SQL_BUCKETED_JOIN_READBACK,
-    "split_leakage": _SQL_SPLIT_LEAKAGE,
-    "feature_hashing": _sql_feature_hashing(),
-    "kneser_ney_bigrams": _SQL_KNESER_NEY_BIGRAMS,
-    "global_shuffle": _SQL_GLOBAL_SHUFFLE,
-    "logreg_train_gd": _SQL_LOGREG_TRAIN_GD,
-    "minhash_merge": _sql_minhash_merge(),
-    "curriculum_order": _SQL_CURRICULUM_ORDER,
-    "stream_minhash": _sql_minhash_merge(),
-    "cluster_sample": _SQL_CLUSTER_SAMPLE,
-    "langid_spans": _sql_langid_spans(),
-    "word_dropout": _SQL_WORD_DROPOUT,
-    "multiprobe_knn": _sql_multiprobe_knn(),
-    "conditional_entropy": _SQL_CONDITIONAL_ENTROPY,
-    "vocab_coverage": _SQL_VOCAB_COVERAGE,
-    "byte_fertility": _SQL_BYTE_FERTILITY,
-    "filter_ensemble": _sql_filter_ensemble(),
-    "ndcg_eval": _sql_ndcg_eval(),
-    "percentile_normalize": _SQL_PERCENTILE_NORMALIZE,
-    "neyman_allocation": _SQL_NEYMAN_ALLOCATION,
-    "crossval_ols": _SQL_CROSSVAL_OLS,
-    "stream_dedup_wm": _SQL_STREAM_DEDUP_WM,
-    "fixed_size_sample": _SQL_FIXED_SIZE_SAMPLE,
-    "code_detect": _SQL_CODE_DETECT,
-    "deleted_interpolation": _SQL_DELETED_INTERPOLATION,
-    "threshold_select": _SQL_THRESHOLD_SELECT,
-    "ks_statistic": _SQL_KS_STATISTIC,
-    "auc_exact": _SQL_AUC_EXACT,
-    "span_corruption": _SQL_SPAN_CORRUPTION,
-    "dedup_diversity": _sql_dedup_diversity(),
-    "heldout_perplexity": _SQL_HELDOUT_PERPLEXITY,
-    "best_snippet": _SQL_BEST_SNIPPET,
-    "shared_prefixes": _SQL_SHARED_PREFIXES,
-    "term_burstiness": _sql_term_burstiness(),
-    "quality_residuals": _SQL_QUALITY_RESIDUALS,
-    "log2_histogram": _SQL_LOG2_HISTOGRAM,
-    "soft_dedup_weights": _SQL_SOFT_DEDUP_WEIGHTS,
-    "dedup_ari": _SQL_DEDUP_ARI,
-    "image_alt_pairs": _SQL_IMAGE_ALT_PAIRS,
-    "random_projection": _sql_random_projection(),
-    "jl_distortion": _sql_jl_distortion(),
-    "mmr_select": _SQL_MMR_SELECT,
-    "kendall_tau": _SQL_KENDALL_TAU,
-    "spearman_rho": _SQL_SPEARMAN_RHO,
-    "mrr_eval": _sql_mrr_eval(),
-    "avg_precision": _SQL_AVG_PRECISION,
-    "rbo_overlap": _sql_rbo_overlap(),
-    "hill_tail_index": _SQL_HILL_TAIL_INDEX,
-    "keyness_terms": _SQL_KEYNESS_TERMS,
-    "simpson_diversity": _SQL_SIMPSON_DIVERSITY,
-    "welch_ttest": _SQL_WELCH_TTEST,
-    "cvm_statistic": _SQL_CVM_STATISTIC,
-    "reliability_bins": _SQL_RELIABILITY_BINS,
-    "waterfill_allocation": _SQL_WATERFILL_ALLOCATION,
-    "otsu_threshold": _SQL_OTSU_THRESHOLD,
-    "compaction_readback": _SQL_COMPACTION_READBACK,
-    "vocab_churn": _SQL_VOCAB_CHURN,
-    "lm_greedy_decode": _sql_lm_greedy_decode(),
-    "benford_deviation": _sql_benford_deviation(),
-    "runs_test": _SQL_RUNS_TEST,
-    "grid_dbscan": _sql_grid_dbscan(),
-    "novelty_curve": _sql_novelty_curve(),
-    "heaps_law": _sql_heaps_law(),
-    "event_acf": _SQL_EVENT_ACF,
-    "cdc_apply": _SQL_CDC_APPLY,
-    "cusum_changepoint": _SQL_CUSUM_CHANGEPOINT,
-    "good_turing": _SQL_GOOD_TURING,
-    "content_type_mismatch": _SQL_CONTENT_TYPE_MISMATCH,
-    "mcnemar_filters": _SQL_MCNEMAR_FILTERS,
-    "mlm_mask_plan": _SQL_MLM_MASK_PLAN,
-    "dedup_purity": _SQL_DEDUP_PURITY,
-    "theil_index": _SQL_THEIL_INDEX,
-    "symspell_variants": _SQL_SYMSPELL_VARIANTS,
-    "hapax_share": _SQL_HAPAX_SHARE,
-    "burrows_delta": _SQL_BURROWS_DELTA,
-    "markov_stationary": _SQL_MARKOV_STATIONARY,
-    "image_dup_clusters": _SQL_IMAGE_DUP_CLUSTERS,
-    "stream_sniff_census": _SQL_STREAM_SNIFF_CENSUS,
-    "chao1_richness": _SQL_CHAO1_RICHNESS,
-    "emd_drift": _SQL_EMD_DRIFT,
-    "query_likelihood": _SQL_QUERY_LIKELIHOOD,
-    "interarrival_stats": _SQL_INTERARRIVAL_STATS,
-    "pair_threshold_curve": _SQL_PAIR_THRESHOLD_CURVE,
-    "pps_sample": _SQL_PPS_SAMPLE,
-    "cms_error_audit": _sql_cms_error_audit(),
-    "bloom_fpr_audit": _SQL_BLOOM_FPR_AUDIT,
-    "prefix_filter_pairs": _SQL_PREFIX_FILTER_PAIRS,
-    "hll_rolling_distinct": _SQL_HLL_ROLLING_DISTINCT,
-    "dedup_key_agreement": _sql_dedup_key_agreement(),
-    "stream_hll_registers": _SQL_STREAM_HLL_REGISTERS,
-    "salted_group_counts": _SQL_SALTED_GROUP_COUNTS,
-    "link_locality": _sql_link_locality(),
-    "title_dup_census": _SQL_TITLE_DUP_CENSUS,
-    # --- round-4 session-16 additions
-    "consistent_hash_moves": _SQL_CONSISTENT_HASH_MOVES,
-    "l_diversity": _SQL_L_DIVERSITY,
-    "copurchase_pairs": _SQL_COPURCHASE_PAIRS,
-    "rocchio_expansion": _SQL_ROCCHIO_EXPANSION,
-    "random_walks": _SQL_RANDOM_WALKS,
-    "http_cache_plan": _SQL_HTTP_CACHE_PLAN,
-    "stream_cms_registers": _SQL_STREAM_CMS_REGISTERS,
-    "coverage_curve": _SQL_COVERAGE_CURVE,
-    "dow_seasonality": _SQL_DOW_SEASONALITY,
-    "index_pruning": _SQL_INDEX_PRUNING,
-    "greedy_cover": _sql_greedy_cover(),
-    "pagerank_convergence": _sql_pagerank_convergence(),
-    "dehyphenate": _SQL_DEHYPHENATE,
-    "pagination_extract": _SQL_PAGINATION_EXTRACT,
-    "breadcrumb_census": _SQL_BREADCRUMB_CENSUS,
-    "page_series_gaps": _SQL_PAGE_SERIES_GAPS,
-    "canonical_pick": _SQL_CANONICAL_PICK,
-    "source_similarity": _SQL_SOURCE_SIMILARITY,
-    "stitch_series": _SQL_STITCH_SERIES,
-    "warc_gz_members": _sql_warc_gz_members(),
-    "http_dechunk": _sql_http_dechunk(),
-    "http_gunzip": _sql_http_gunzip(),
-    "data_uri_images": _sql_data_uri_images(),
-    "meta_refresh_redirects": _sql_meta_refresh_redirects(),
-    "optout_resolution": _sql_optout_resolution(),
-    "multipart_parse": _sql_multipart_parse(),
-    "idn_hosts": _sql_idn_hosts(),
-    "srcset_candidates": _sql_srcset_candidates(),
-    "opengraph_meta": _sql_opengraph_meta(),
-    "charset_sniff": _sql_charset_sniff(),
-    "tiff_lzw_decode": _SQL_TIFF_LZW_DECODE,
-    "cookie_census": _sql_cookie_census(),
-    "security_headers": _sql_security_headers(),
-    "amp_pairs": _sql_amp_pairs(),
-    "license_detect": _sql_license_detect(),
-    "faq_pairs": _sql_faq_pairs(),
-    "split_sentences": _SQL_SPLIT_SENTENCES,
-    "form_census": _sql_form_census(),
-    "phash_groups": _SQL_PHASH_GROUPS,
-    "code_blocks": _sql_code_blocks(),
-    "math_blocks": _sql_math_blocks(),
-    "wordpiece_segments": _sql_wordpiece_segments(),
-    "wordpiece_usage": _sql_wordpiece_usage(),
-    "wordpiece_fertility": _sql_wordpiece_fertility(),
-    "image_harvest": _sql_image_harvest(),
-    "stream_media_decode": _SQL_STREAM_MEDIA_DECODE,
-    "png_variants_decode": _SQL_PNG_VARIANTS_DECODE,
-    "ico_decode": _SQL_ICO_DECODE,
-    "page_assets": _sql_page_assets(),
-    "image_colors": _SQL_IMAGE_COLORS,
-    "zip_members": _SQL_ZIP_MEMBERS,
-    "g711_decode": _SQL_G711_DECODE,
-    "media_pipeline": _SQL_MEDIA_PIPELINE,
-    "tar_members": _SQL_TAR_MEMBERS,
-    "url_safety": _sql_url_safety(),
-    "xml_sink_readback": _SQL_XML_SINK_READBACK,
-    "xml_field_extract": _SQL_XML_FIELD_EXTRACT,
-    "variant_shred": _SQL_VARIANT_SHRED,
-    "variant_explode_tags": _SQL_VARIANT_EXPLODE_TAGS,
-    "homoglyph_domains": _sql_homoglyph_domains(),
-    "session_window_agg": _SQL_SESSION_WINDOW_AGG,
-    "udtf_shingles": _SQL_UDTF_SHINGLES,
-    # streamed session_window must reproduce the batch result exactly
-    "stream_session_window": _SQL_SESSION_WINDOW_AGG,
-    "observed_metrics": _SQL_OBSERVED_METRICS,
-    "ansi_safety": _SQL_ANSI_SAFETY,
-    "bitmap_distinct": _SQL_BITMAP_DISTINCT,
-    "listagg_sources": _SQL_LISTAGG_SOURCES,
-    "bloom_sink_readback": _SQL_BLOOM_SINK_READBACK,
-    "hll_native_distinct": _SQL_HLL_NATIVE_DISTINCT,
-    # --- round-4 session-20 additions
-    "t_closeness": _SQL_T_CLOSENESS,
-    "mann_whitney": _SQL_MANN_WHITNEY,
-    "fleiss_kappa": _SQL_FLEISS_KAPPA,
-    "shannon_diversity": _SQL_SHANNON_DIVERSITY,
-    "peak_concurrency": _SQL_PEAK_CONCURRENCY,
-    "quantile_sketch_merge": _SQL_QUANTILE_SKETCH_MERGE,
-    "toc_extract": _SQL_TOC_EXTRACT,
-    "cdx_zipnum": _sql_cdx_zipnum(),
-    "unigram_segments": _sql_unigram_segments(),
-    "unigram_fertility": _sql_unigram_fertility(),
-    "sentence_dedup": _SQL_SENTENCE_DEDUP,
-    "stream_quantile_sketch": _SQL_STREAM_QUANTILE_SKETCH,
-    "image_histogram": _SQL_IMAGE_HISTOGRAM,
-    "concentration_indices": _SQL_CONCENTRATION_INDICES,
-    "psi_drift": _SQL_PSI_DRIFT,
-    "brier_score": _SQL_BRIER_SCORE,
-    "seasonal_anomaly": _SQL_SEASONAL_ANOMALY,
-    "measurements_extract": _SQL_MEASUREMENTS_EXTRACT,
-    "quote_mining": _SQL_QUOTE_MINING,
-    "embedding_sq8": _SQL_EMBEDDING_SQ8,
-    "sentence_chunks": _SQL_SENTENCE_CHUNKS,
-    "harmonic_centrality": _sql_harmonic_centrality(),
-    "robots_directive_merge": _SQL_ROBOTS_DIRECTIVE_MERGE,
-    "bowtie_membership": _sql_bowtie_membership(),
-    "rag_corpus_pipeline": _SQL_RAG_CORPUS_PIPELINE,
-    "markov_entropy_rate": _sql_markov_entropy_rate(),
-    "sq8_recall": _sql_sq8_recall(),
-    "skew_join_salted": _SQL_SKEW_JOIN_SALTED,
-    "range_partition_audit": _SQL_RANGE_PARTITION_AUDIT,
-    "sliding_event_counts": _SQL_SLIDING_EVENT_COUNTS,
-}
-
-
-# ---------------------------------------------------------------------------
-# driver-window rotation (round 4)
-# ---------------------------------------------------------------------------
-# The driver's per-round CORRECTNESS sweep covers only the first ~50 registry
-# entries.  Rounds 1-3 cumulatively hard-checked 114 of the 185 entries; the
-# 71 below have NEVER appeared in a CORRECTNESS file.  Rotate them to the
-# head (alphabetical, matching the judge's round-3 enumeration) so round 4's
-# window lands exclusively on never-checked entries; any round-4 additions go
-# BEHIND them.  Round 5 repeats the rotation with whatever remains.
-
-_NEVER_DRIVER_CHECKED_R4: tuple[str, ...] = (
-    "anchor_index",
-    "anchor_texts",
-    "audio_decode",
-    "bloom_blocklist",
-    "bm25_scores",
-    "bpe_pair_counts",
-    "brand_suppliers",
-    "c4_filters",
-    "cdx_index",
-    "cdx_revisits",
-    "char_entropy",
-    "chunk_documents",
-    "cms_counts",
-    "cohort_retention",
-    "contamination",
-    "crawl_schedule",
-    "curation_pipeline",
-    "dedup_clusters",
-    "dom_stats",
-    "domain_rollup",
-    "dup_substring_runs",
-    "embedding_pq_knn",
-    "error_pages",
-    "extraction_eval",
-    "frontier_polite",
-    "gif_decode",
-    "gopher_repetition",
-    "gopher_rules",
-    "hll_by_source",
-    "hll_distinct",
-    "holdout_split",
-    "host_hits",
-    "host_length_outliers",
-    "host_page_cap",
-    "host_template_lines",
-    "html_metadata",
-    "image_ahash",
-    "image_decode",
-    "image_near_pairs",
-    "image_resize",
-    "incremental_dedup",
-    "inverted_index",
-    "ivf_refined_assign",
-    "jpeg_decode",
-    "large_orders",
-    "late_priority",
-    "length_ntiles",
-    "length_quantiles",
-    "line_dedup",
-    "lm_scores",
-    "meta_robots",
-    "mojibake_stats",
-    "pack_sequence_rows",
-    "pack_sequences",
-    "pdf_extract",
-    "pmi_collocations",
-    "quality_classifier",
-    "recrawl_priority",
-    "registrable_domains",
-    "robots_precedence",
-    "robots_rules",
-    "rolling_values",
-    "rollup_census",
-    "script_mix",
-    "shard_assign",
-    "sitemap_urls",
-    "stream_dedup",
-    "stream_incremental_dedup",
-    "text_density_blocks",
-    "url_spam",
-    "warc_binary_parse",
-)
-
-
-def _rotate_never_checked_first(reg: dict) -> dict:
-    """Order never-driver-checked entries first so the driver's ~50-query
-    correctness window always lands on fresh coverage.
-
-    Self-maintaining: the checked set is derived from whatever
-    CORRECTNESS_r*.json artifacts exist in the repo root at import, so
-    when a new round's artifact appears the next round's window
-    automatically advances to the next unchecked block — no manual
-    reorder per round. Falls back to the round-4 static list when no
-    artifacts are present (fresh checkout)."""
-    import json
-    import os
-
-    checked: set[str] = set()
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for i in range(1, 10):
-        path = os.path.join(root, f"CORRECTNESS_r{i:02d}.json")
-        if os.path.exists(path):
-            try:
-                with open(path) as fh:
-                    data = json.load(fh)
-                if isinstance(data, dict):
-                    checked.update(data.keys())
-            except (OSError, ValueError):
-                pass
-    if checked:
-        head_names = [k for k in reg if k not in checked]
-        # Round-5 rotation refinement (VERDICT item 5): the streaming
-        # face is parity-green but 10 of its 15 entries have never hit
-        # a hard driver check — float never-checked stream_* entries to
-        # the front of the window so CORRECTNESS_r05 covers them.
-        head_names.sort(key=lambda k: not k.startswith("stream_"))
-    else:
-        head_names = list(_NEVER_DRIVER_CHECKED_R4)
-    head = {k: reg[k] for k in head_names if k in reg}
-    return {**head, **{k: v for k, v in reg.items() if k not in head}}
-
-
-SPARK = _rotate_never_checked_first(SPARK)
-
+for _info in pkgutil.iter_modules(registry.__path__):
+    _mod = importlib.import_module(f"{registry.__name__}.{_info.name}")
+    for _attr, _fn in list(vars(_mod).items()):
+        # a q_ function imported from a sibling family counts where defined
+        if not _attr.startswith("q_") or _fn.__module__ != _mod.__name__:
+            continue
+        _name = _attr[2:]
+        if _name in SPARK:
+            raise ImportError(f"query {_name!r} is defined in two registry modules")
+        SPARK[_name] = _fn
+        if hasattr(_mod, f"_SQL_{_name.upper()}"):
+            ORACLE[_name] = getattr(_mod, f"_SQL_{_name.upper()}")
+        elif hasattr(_mod, f"_sql_{_name}"):
+            ORACLE[_name] = getattr(_mod, f"_sql_{_name}")()

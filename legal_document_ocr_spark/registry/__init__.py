@@ -1,7 +1,9 @@
-"""Per-family registry segments (round-4 split of queries.py).
+"""The query registry, one module per query family.
 
-Each module holds the query callables and DuckDB oracle SQL for one
-slice of the registry, byte-identical to their pre-split bodies; the
-SPARK/ORACLE dicts that __spark_entry__ consumes stay in
-legal_document_ocr_spark.queries (the thin aggregator).
+A query ``<name>`` is a function ``q_<name>(spark, sf_dir) -> DataFrame``
+defined in one of these modules (a ``q_`` function imported from a sibling
+does not count again). Its DuckDB oracle is the same module's
+``_SQL_<NAME>`` string, or the string its ``_sql_<name>()`` returns; with
+neither, the query is rows-only. ``legal_document_ocr_spark.queries`` builds
+the ``SPARK`` and ``ORACLE`` dicts from this rule alone.
 """

@@ -1,23 +1,10 @@
-"""Shared helpers for the registry segments (split from queries.py)."""
+"""Shared helpers for the registry family modules."""
 
 from __future__ import annotations
-
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
 
 # ---------------------------------------------------------------------------
 # helpers

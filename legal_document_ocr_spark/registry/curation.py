@@ -1,23 +1,12 @@
-"""Registry segment: curation, LM scoring, ANN/embedding families (split from queries.py, bodies unchanged)."""
+"""Registry segment: curation, LM scoring, ANN/embedding families."""
 
 from __future__ import annotations
-
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
+from ..operators import dedup, relational, similarity, textops
+from ..operators.textops import STOPWORDS
 
 from .common import (
     _TOKS,
@@ -26,7 +15,7 @@ from .common import (
     _tbl,
 )
 from .textana import (
-    _SQL_QUALITY,
+    _SQL_QUALITY_SCORES,
     _in_list,
 )
 from .dedup_olap import (
@@ -39,7 +28,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.bpe_pair_counts(_docs(spark, sf_dir))
 
 
-_SQL_BPE_PAIRS = f"""
+_SQL_BPE_PAIR_COUNTS = f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 p AS (
   SELECT unnest(flatten(list_transform(toks, t ->
@@ -134,7 +123,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.quality_classifier(_docs(spark, sf_dir))
 
 
-_SQL_QUALITY_CLF = f"""
+_SQL_QUALITY_CLASSIFIER = f"""
 WITH t AS (
   SELECT doc_id, text, {_TOKS} AS toks,
     len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_punct
@@ -197,7 +186,7 @@ def q_curation_funnel_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_CURATION_FUNNEL_NEARDUP = (
     f"""
-WITH RECURSIVE qq AS ({_SQL_QUALITY}),
+WITH RECURSIVE qq AS ({_SQL_QUALITY_SCORES}),
 filtered AS (
   SELECT d.doc_id, d.text, d.lang, qq.quality_score
   FROM documents d JOIN qq USING (doc_id)
@@ -245,7 +234,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.repetition_stats(_docs(spark, sf_dir))
 
 
-_SQL_REPETITION = f"""
+_SQL_REPETITION_STATS = f"""
 WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
 pt AS (SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY doc_id, tok)
 SELECT doc_id, sum(c)::bigint AS n_tokens, count(*) AS n_distinct,
@@ -411,7 +400,7 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.winnow_fingerprints(_docs(spark, sf_dir))
 
 
-_SQL_WINNOW = """
+_SQL_WINNOW_FINGERPRINTS = """
 WITH h AS (
   SELECT doc_id,
     CASE WHEN length(text) >= 8 THEN

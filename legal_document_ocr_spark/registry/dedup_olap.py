@@ -1,23 +1,11 @@
-"""Registry segment: dedup family + OLAP/gauge batteries (split from queries.py, bodies unchanged)."""
+"""Registry segment: dedup family + OLAP/gauge batteries."""
 
 from __future__ import annotations
-
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
+from ..operators import dedup, relational, similarity, textops
 
 from .common import (
     _DOUBLED_SQL,
@@ -31,6 +19,7 @@ from .common import (
     _utc,
 )
 from .relational_web import (
+    _SQL_ROBOTS_PRECEDENCE,
     _host_graph_edges,
     _synth_sitemaps_df,
     q_robots_precedence,
@@ -340,7 +329,11 @@ def q_robots_blockrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.groupBy("host", "verdict").agg(F.count("*").alias("n_urls"))
 
 
-_SQL_ROBOTS_BLOCKRATE: str  # defined after _SQL_ROBOTS_PRECEDENCE below
+_SQL_ROBOTS_BLOCKRATE = (
+    "SELECT host, verdict, count(*)::bigint AS n_urls FROM ("
+    + _SQL_ROBOTS_PRECEDENCE
+    + ") b GROUP BY 1, 2"
+)
 
 
 def q_sitemap_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1272,12 +1265,12 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
 """
 
 
-def q_length_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_length_ntiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ntile(4) length quartiles per source (relational.length_quartiles)."""
     return relational.length_quartiles(_docs(spark, sf_dir))
 
 
-_SQL_LENGTH_QUARTILES_NTILE = """
+_SQL_LENGTH_NTILES = """
 SELECT doc_id, source, n_chars,
   ntile(4) OVER (PARTITION BY source ORDER BY n_chars, doc_id)::int
     AS quartile
@@ -1840,6 +1833,9 @@ def q_stream_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = stream_minhash_state(spark, f"{sf_dir}/documents.parquet")
     run_stream_to_table(spark, sdf, name, output_mode="complete")
     return spark.table(name)
+
+
+_sql_stream_minhash = _sql_minhash_merge
 
 
 # ---------------------------------------------------------------------------

@@ -1,16 +1,12 @@
-"""Registry segment: extraction pipeline queries (split from queries.py, bodies unchanged)."""
+"""Registry segment: extraction pipeline queries."""
 
 from __future__ import annotations
-
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
+from ..operators import textops
 from ..sources.pages import (
     synthesize_pages_df,
     synthesize_table_pages_df,
@@ -44,7 +40,7 @@ def q_extract_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("url", "extracted_text")
 
 
-_SQL_EXTRACT_MAIN = """
+_SQL_EXTRACT_MAIN_TEXT = """
 SELECT 'https://' || source || '.example.com/' || lang || '/' || doc_id AS url,
        CASE WHEN length(text) >= 25 THEN text ELSE '' END AS extracted_text
 FROM documents
@@ -61,6 +57,9 @@ def q_extract_sql_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         "SELECT url, ldos_extract_text(html) AS extracted_text FROM pages_sql_v"
     )
+
+
+_SQL_EXTRACT_SQL_SURFACE = _SQL_EXTRACT_MAIN_TEXT
 
 
 def q_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,7 +80,7 @@ def q_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # mirrors the density filter (MIN_BLOCK_CHARS=25): a sub-threshold body
 # keeps no span, so n_spans=0, extracted_text='' and span_w NULL — same
-# guard as _SQL_EXTRACT_MAIN/_SQL_EXPLODE_SPANS (pinned by
+# guard as _SQL_EXTRACT_MAIN_TEXT/_SQL_EXPLODE_SPANS (pinned by
 # tests/test_pipeline.py short-doc case)
 _SQL_EXTRACT_STATS = """
 SELECT 'https://' || source || '.example.com/' || lang || '/' || doc_id AS url,
@@ -234,7 +233,7 @@ def q_partitioned_sink_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PARTITIONED_SINK = """
+_SQL_PARTITIONED_SINK_READBACK = """
 SELECT 'https://' || source || '.example.com/' || lang || '/' || doc_id AS url,
        CASE WHEN length(text) >= 25 THEN text ELSE '' END AS extracted_text,
        lang
@@ -307,7 +306,7 @@ def q_merge_documents_vn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_MERGE_VN = f"""
+_SQL_MERGE_DOCUMENTS_VN = f"""
 WITH t AS ({_VN_BASE}),
 p AS (
   SELECT *, {_vn_page_text_sql("1")} AS p1, {_vn_page_text_sql("2")} AS p2

@@ -1,22 +1,12 @@
-"""Registry segment: published filters, sketches, BPE, frontier capstones (split from queries.py, bodies unchanged)."""
+"""Registry segment: published filters, sketches, BPE, frontier capstones."""
 
 from __future__ import annotations
-
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
+from ..operators import dedup, relational, textops
+from ..sources.pages import synthesize_pages_df
 from ..stages import run_extraction
 
 from .common import (
@@ -27,7 +17,6 @@ from .common import (
     _utc,
 )
 from .relational_web import (
-    _SQL_ROBOTS_PRECEDENCE,
     _host_graph_edges,
     _synth_robots_df,
 )
@@ -205,7 +194,7 @@ def q_mojibake_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.mojibake_stats(d.select("doc_id", t.alias("text")))
 
 
-_SQL_MOJIBAKE = """
+_SQL_MOJIBAKE_STATS = """
 WITH d AS (
   SELECT doc_id,
     CASE WHEN doc_id % 3 = 0
@@ -415,7 +404,7 @@ def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.bm25_scores(_docs(spark, sf_dir), _BM25_TERMS)
 
 
-_SQL_BM25 = f"""
+_SQL_BM25_SCORES = f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 b AS (
   SELECT doc_id, len(toks)::bigint AS dl,
@@ -450,7 +439,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.pmi_collocations(_docs(spark, sf_dir))
 
 
-_SQL_PMI = f"""
+_SQL_PMI_COLLOCATIONS = f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 uni AS (
   SELECT x AS term, count(*)::bigint AS c
@@ -500,7 +489,7 @@ def q_c4_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.c4_filters(d.select("doc_id", t.alias("text")))
 
 
-_SQL_C4 = f"""
+_SQL_C4_FILTERS = f"""
 WITH d0 AS (
   SELECT doc_id, replace(text, ' merge', '. merge') AS text FROM documents
 ),
@@ -1614,15 +1603,6 @@ SELECT d.doc_id, coalesce(s.n_tokens, 0)::bigint AS n_tokens,
        THEN floor(s.s::double * 1000000.0)::bigint END AS log_weight_micro
 FROM documents d LEFT JOIN s USING (doc_id)
 """
-
-
-_SQL_ROBOTS_BLOCKRATE = (
-    "SELECT host, verdict, count(*)::bigint AS n_urls FROM ("
-    + _SQL_ROBOTS_PRECEDENCE
-    + ") b GROUP BY 1, 2"
-)
-
-
 
 
 _MONTHS3 = (

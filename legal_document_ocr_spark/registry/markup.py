@@ -7,7 +7,6 @@ deterministically decorated template pages (image_alt_pairs' pattern).
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

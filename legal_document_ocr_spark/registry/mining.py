@@ -3,7 +3,7 @@ skyline, and cross-snapshot novelty (round-4 session-10 additions).
 
 Each entry pairs the Spark operator with a DuckDB oracle that restates the
 same deterministic computation (integer/micro arithmetic, md5 hashing,
-fixed tuple orderings — the portability contract from queries.py).
+fixed tuple orderings — the portability contract in queries.py).
 """
 
 from __future__ import annotations

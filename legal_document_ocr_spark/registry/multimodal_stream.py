@@ -1,29 +1,19 @@
-"""Registry segment: multimodal stages, streaming, URL/host hygiene (split from queries.py, bodies unchanged)."""
+"""Registry segment: multimodal stages, streaming, URL/host hygiene."""
 
 from __future__ import annotations
-
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
+from ..operators import multimodal, relational, textops
 
 from .common import (
     _TOKS,
     _docs,
     _utc,
 )
+from .mining import _SQL_SESSION_WINDOW_AGG
+from .relational_web import _SQL_SESSIONIZE_EVENTS, _SQL_WINDOWED_EVENT_COUNTS
 
 # ---------------------------------------------------------------------------
 # multimodal + streaming
@@ -37,7 +27,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.media_features(payloads)
 
 
-_SQL_MULTIMODAL = """
+_SQL_MULTIMODAL_FEATURES = """
 SELECT doc_id,
   octet_length(encode(text))::bigint AS n_bytes,
   md5(text) AS content_hash,
@@ -78,7 +68,7 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed sessions emit on gap breaks; each user's final open session emits
     through a real event-time timeout once the sentinel-driven watermark
     passes its deadline (streaming/pipeline.py). Streamed output == batch
-    sessionization exactly, so the full _SQL_SESSIONIZE oracle applies."""
+    sessionization exactly, so the full _SQL_SESSIONIZE_EVENTS oracle applies."""
     from ..streaming.pipeline import stream_sessionize
 
     name = "stream_sessions_result"
@@ -92,6 +82,9 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     return spark.table(name)
+
+
+_SQL_STREAM_SESSIONIZE = _SQL_SESSIONIZE_EVENTS
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,7 +132,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-_SQL_STREAM_INCR_DEDUP = """
+_SQL_STREAM_INCREMENTAL_DEDUP = """
 WITH seen AS (
   SELECT DISTINCT sha256(text) AS content_hash FROM documents
   WHERE doc_id < 400
@@ -159,6 +152,9 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = stream_windowed_counts(spark, f"{sf_dir}/events.parquet")
     run_stream_to_table(spark, sdf, name)
     return spark.table(name)
+
+
+_SQL_STREAM_WINDOWED_COUNTS = _SQL_WINDOWED_EVENT_COUNTS
 
 
 def q_url_spam(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -765,6 +761,9 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = stream_session_window(spark, f"{sf_dir}/events.parquet")
     run_stream_to_table(spark, sdf, name)
     return spark.table(name)
+
+
+_SQL_STREAM_SESSION_WINDOW = _SQL_SESSION_WINDOW_AGG
 
 
 # ---------------------------------------------------------------------------

@@ -1,23 +1,12 @@
-"""Registry segment: relational battery + web/WARC/CDX families (split from queries.py, bodies unchanged)."""
+"""Registry segment: relational battery + web/WARC/CDX families."""
 
 from __future__ import annotations
-
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
+from ..operators import dedup, multimodal, relational, textops
+from ..sources.pages import synthesize_pages_df
 
 from ..scale.salt import ensure_parallelism as _spread
 from .common import (
@@ -39,7 +28,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return relational.pricing_summary(_tbl(spark, sf_dir, "lineitem"))
 
 
-_SQL_PRICING = """
+_SQL_PRICING_SUMMARY = """
 SELECT l_returnflag, l_linestatus,
   sum(cast(l_quantity as decimal(18,2)))::double AS sum_qty,
   sum(cast(l_extendedprice as decimal(18,2)))::double AS sum_base_price,
@@ -61,7 +50,7 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_REVENUE_NATION = """
+_SQL_REVENUE_BY_NATION = """
 SELECT n_name,
   sum(cast(o_totalprice as decimal(18,2)))::double AS revenue,
   count(*) AS n_orders
@@ -114,7 +103,7 @@ def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SESSIONIZE = """
+_SQL_SESSIONIZE_EVENTS = """
 WITH e AS (
   SELECT user_id, event_id, ts,
     CASE WHEN lag(ts) OVER w IS NULL
@@ -141,7 +130,7 @@ def q_windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return relational.windowed_event_counts(_tbl(spark, sf_dir, "events"))
 
 
-_SQL_WINDOWED_COUNTS = """
+_SQL_WINDOWED_EVENT_COUNTS = """
 SELECT (floor(epoch(ts) / 300) * 300)::bigint AS bucket_start, event_type,
   count(*) AS n_events,
   sum(cast(value as decimal(18,2)))::double AS sum_value
@@ -155,7 +144,7 @@ def q_list_documents_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_LIST_DOCS = """
+_SQL_LIST_DOCUMENTS_PAGE = """
 SELECT doc_id, text, lang, source, n_chars FROM documents
 WHERE lang = 'en' ORDER BY doc_id LIMIT 20 OFFSET 10
 """
@@ -176,7 +165,7 @@ def q_delete_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return relational.delete_documents(docs, ids).where(F.col("doc_id") < 100)
 
 
-_SQL_DELETE_DOCS = """
+_SQL_DELETE_DOCUMENTS = """
 SELECT doc_id, text, lang, source, n_chars FROM documents
 WHERE doc_id % 7 <> 0 AND doc_id < 100
 """
@@ -196,7 +185,7 @@ def q_update_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_UPDATE_DOCS = """
+_SQL_UPDATE_DOCUMENTS = """
 SELECT doc_id, text,
   CASE WHEN doc_id % 2 = 0 THEN 'xx' ELSE lang END AS lang,
   source, n_chars
@@ -210,7 +199,7 @@ def q_adjacent_word_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_WORD_OVERLAP = f"""
+_SQL_ADJACENT_WORD_OVERLAP = f"""
 WITH w AS (
   SELECT doc_id, list_distinct({_TOKS}) AS words FROM documents
 ), p AS (

@@ -1,23 +1,12 @@
-"""Registry segment: text analysis (split from queries.py, bodies unchanged)."""
+"""Registry segment: text analysis."""
 
 from __future__ import annotations
-
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
+from ..operators import dedup, textops
 from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
 
 from .common import (
     _DOUBLED_SQL,
@@ -84,7 +73,7 @@ def q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _as_long(textops.quality_scores(_docs(spark, sf_dir)), "n_tokens")
 
 
-_SQL_QUALITY = f"""
+_SQL_QUALITY_SCORES = f"""
 WITH t AS (
   SELECT doc_id, text, {_TOKS} AS toks,
     len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_punct
@@ -140,7 +129,7 @@ def q_corpus_length_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CORPUS_STATS = """
+_SQL_CORPUS_LENGTH_STATS = """
 SELECT lang, count(*) AS n_docs,
   round(sum(n_chars)::double / count(*), 6) AS mean_chars,
   round(quantile_cont(n_chars, 0.5), 6) AS median_chars,
@@ -166,7 +155,7 @@ def q_nfc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_NFC_FP = """
+_SQL_NFC_FINGERPRINTS = """
 SELECT doc_id, md5(nfc_normalize(text)) AS nfc_fp,
        (nfc_normalize(text) = text)::bigint AS unchanged
 FROM documents
@@ -279,7 +268,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_CURATION_FUNNEL = f"""
-WITH q AS ({_SQL_QUALITY}),
+WITH q AS ({_SQL_QUALITY_SCORES}),
 k AS (
   SELECT d.doc_id, d.lang, d.text, q.quality_score
   FROM documents d JOIN q USING (doc_id)

@@ -1,23 +1,11 @@
-"""Registry segment: TPC-H shapes, HTML extraction, packing, media decode (split from queries.py, bodies unchanged)."""
+"""Registry segment: TPC-H shapes, HTML extraction, packing, media decode."""
 
 from __future__ import annotations
-
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
+from ..operators import dedup, multimodal, relational, textops
 
 from ..scale.salt import ensure_parallelism as _spread
 from .common import (
@@ -564,7 +552,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.chunk_documents(_docs(spark, sf_dir))
 
 
-_SQL_CHUNK_DOCS = f"""
+_SQL_CHUNK_DOCUMENTS = f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 c AS (
   SELECT doc_id,

@@ -10,7 +10,6 @@ gzip->gunzip round-trips are what the hash match proves.
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

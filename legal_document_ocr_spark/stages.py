@@ -16,8 +16,8 @@ Design decisions:
 - the field battery is pinned to Python ``re`` inside the UDF rather than
   Catalyst ``regexp_extract`` because byte-identical parity with the
   reference requires Python-regex semantics for Vietnamese case folding
-  (SURVEY.md §7 risk 1); a Catalyst-native variant of the SQL-safe subset
-  lives in operators/textops.py and is oracle-checked;
+  (SURVEY.md §7 risk 1); no Catalyst variant exists, and a field may move
+  to one only after a differential test against kernels.extract_fields;
 - cheap predicates stay native and BEFORE the UDF stage — Catalyst will not
   push filters through a Python UDF (SURVEY.md §4), so plan order is the
   pushdown;

@@ -209,7 +209,7 @@ def stream_sessionize(
     event (see ``_stage_with_sentinel``) whose event time pushes the
     watermark past every open session's deadline; the timed-out state handler
     emits the tail and clears state. Streamed output then equals the batch
-    sessionization EXACTLY (oracle: _SQL_SESSIONIZE). ``emit_final=False``
+    sessionization EXACTLY (oracle: _SQL_SESSIONIZE_EVENTS). ``emit_final=False``
     keeps the pure closed-sessions semantics (batch minus open tails —
     pinned by tests/test_streaming.py).
     """

@@ -16,8 +16,6 @@ Usage:  python scripts/registry_rotation.py [window_size]
 
 from __future__ import annotations
 
-import glob
-import json
 import sys
 
 sys.path.insert(0, ".")
@@ -28,13 +26,8 @@ import __spark_entry__ as entrymod  # noqa: E402
 def main() -> None:
     window = int(sys.argv[1]) if len(sys.argv) > 1 else 50
     order = list(entrymod.queries())
-    checked: set[str] = set()
-    for path in sorted(glob.glob("CORRECTNESS_r0*.json")):
-        with open(path) as f:
-            d = json.load(f)
-        ks = d.get("queries", d)
-        checked.update(ks if isinstance(ks, list) else ks.keys())
-        print(f"{path}: cumulative driver-checked = {len(checked)}")
+    checked = entrymod.driver_checked()
+    print(f"CORRECTNESS_r*.json: driver-checked = {len(checked)}")
     head = order[:window]
     wasted = [q for q in head if q in checked]
     backlog = [q for q in order if q not in checked]

@@ -102,7 +102,7 @@ def test_stream_sessionize_closed_sessions_match_batch(spark):
 def test_stream_sessionize_emit_final_matches_batch_exactly(spark):
     """With emit_final, the event-time timeout flushes every open tail: the
     streamed result equals batch sessionization EXACTLY (the property that
-    makes the full _SQL_SESSIONIZE oracle apply to the streaming op)."""
+    makes the full _SQL_SESSIONIZE_EVENTS oracle apply to the streaming op)."""
     from legal_document_ocr_spark.operators.relational import sessionize_events
     from legal_document_ocr_spark.streaming.pipeline import stream_sessionize
 
